@@ -13,6 +13,8 @@ completes; the awaiting task is released).
 ``async_collect`` also mirrors the reference's ``output_format`` menu
 (polars/pandas/list/dict there; spark/pandas/arrow/list/dict here —
 'spark' returns the lazy DataFrame, everything else materializes).
+The list/dict/pandas formats are driver-bound by design: they collect
+every row into driver memory, so use 'spark' or 'arrow' at scale.
 """
 
 from __future__ import annotations

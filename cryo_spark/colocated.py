@@ -42,7 +42,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import engine, snapshots
+from . import engine
 from .arrowutil import amap
 from .tablespec import SEQUENCES, TableSpec
 
@@ -53,53 +53,24 @@ ENC_COLUMNS = ["chunk_id", "column", "n_rows", "status", "payload"]
 
 def _clean_files(output_dir: str) -> list[str] | None:
     """Encoded parquet files of a frozen output IF the fast-path
-    preconditions hold, else None:
+    preconditions hold, else None. The files and the facts come from
+    the engine's visibility resolver (``engine._visible``):
 
     - no snapshot state (pending deletes / rollback / branch heads
       change row visibility in ways only the relational path applies);
     - every manifest run committed (its ``_SUCCESS`` marker present);
     - no compaction tombstones (retired chunks need the drop bitmaps);
+    - every visible run readable (else the fallback raises naming it);
     - flat encoded layout (no ``partition_by`` nested dirs).
     """
-    if "://" in output_dir or snapshots.current(output_dir) is not None:
+    vis = engine._visible(output_dir)
+    if (vis.snapshot or vis.drop or vis.missing
+            or vis.listed["manifest"] - vis.committed):
         return None
-    enc_base = engine._encoded_path(output_dir)
-    man_base = engine._manifest_path(output_dir)
-    ts_base = engine._tombstones_path(output_dir)
-    if not os.path.isdir(enc_base):
-        return []
-
-    def run_dirs(base: str) -> set[str]:
-        if not os.path.isdir(base):
-            return set()
-        return {d for d in os.listdir(base) if d.startswith("run=")}
-
-    man_runs = run_dirs(man_base)
-    # manifest consolidation: absorbed runs' dirs are gone but their
-    # rows live in the generation file — committed by definition
-    cons = snapshots.latest_consolidation(output_dir)
-    absorbed = ({f"run={r}" for r in cons["absorbed"]}
-                if cons is not None else set())
-    man_runs |= absorbed
-    root_success = os.path.exists(os.path.join(man_base, "_SUCCESS"))
-    committed = {
-        r for r in man_runs
-        if r in absorbed or root_success
-        or os.path.exists(os.path.join(man_base, r, "_SUCCESS"))
-    }
-    if man_runs - committed:
-        return None
-    if run_dirs(ts_base) & committed:
-        return None
-    files: list[str] = []
-    for r in sorted(run_dirs(enc_base) & committed):
-        d = os.path.join(enc_base, r)
-        for f in sorted(os.listdir(d)):
-            p = os.path.join(d, f)
-            if f.endswith(".parquet"):
-                files.append(p)
-            elif os.path.isdir(p):
-                return None  # partition_by nested layout
+    files = [f for r in sorted(vis.files) for f in vis.files[r]]
+    if any(os.path.basename(os.path.dirname(os.path.dirname(f)))
+           != "encoded" for f in files):
+        return None  # partition_by nested layout
     return files
 
 

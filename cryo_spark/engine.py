@@ -22,6 +22,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -711,10 +712,11 @@ def _decode_files_kernel(columns: list[str], spec: TableSpec,
     trace is its error manifest row, and resume re-encodes it under a
     later run (its own files).
 
-    ``drop_bits`` is a packed bitmap of chunk_ids retired by compaction
-    tombstones for the run these files belong to — O(n_chunks/8) bytes
-    in the task closure regardless of how many chunks were compacted
-    (the same representation as the resume bitmap)."""
+    ``drop_bits`` is a packed bitmap of chunk_ids retired by visible
+    tombstones for the run these files belong to (:func:`_visible`) —
+    O(n_chunks/8) bytes in the task closure regardless of how many
+    chunks were compacted (the same representation as the resume
+    bitmap)."""
 
     def fn(batches):
         tbl = pa.Table.from_batches(list(batches))
@@ -722,14 +724,9 @@ def _decode_files_kernel(columns: list[str], spec: TableSpec,
             return
         tbl = tbl.filter(pc.equal(tbl.column("status"), "ok"))
         if drop_bits is not None and tbl.num_rows:
-            bits = np.frombuffer(drop_bits, dtype=np.uint8)
-            cid_ = tbl.column("chunk_id").to_numpy(zero_copy_only=False)
-            cid_ = cid_.astype(np.int64)
-            in_range = cid_ < (len(bits) << 3)
-            dropped = np.zeros(len(cid_), dtype=bool)
-            ir = cid_[in_range]
-            dropped[in_range] = (
-                bits[ir >> 3] >> (ir & 7).astype(np.uint8)) & 1 == 1
+            dropped = _test_bits(
+                np.frombuffer(drop_bits, dtype=np.uint8),
+                tbl.column("chunk_id").to_numpy(zero_copy_only=False))
             if dropped.any():
                 tbl = tbl.filter(pa.array(~dropped))
         if tbl.num_rows == 0:
@@ -753,146 +750,43 @@ def decode_frozen(spark: SparkSession, output_dir: str,
                   columns: list[str] | None = None,
                   spec: TableSpec = SEQUENCES,
                   as_of: int | str | None = None) -> DataFrame:
-    """Shuffle-free decode of a frozen output dir.
+    """Shuffle-free decode of a frozen output dir — the one read path for
+    frozen outputs.
 
     The encode stage co-locates every chunk's rows inside one encoded
-    file (one reduce task writes whole chunks), so the relational
-    decode's repartition moves every payload byte through an exchange
-    for nothing. Here the scan tasks read whole encoded files with
-    pyarrow and decode chunk groups in place — zero payload exchanges,
-    which at the 10^12-sequence scale is the difference between a read
-    and a full extra shuffle of the compressed table.
+    file (one reduce task writes whole chunks), so a relational decode's
+    repartition would move every payload byte through an exchange for
+    nothing. Here the scan tasks read whole encoded files with pyarrow
+    and decode chunk groups in place — zero payload exchanges, which at
+    the 10^12-sequence scale is the difference between a read and a
+    full extra shuffle of the compressed table.
 
-    The orphan-invisibility contract of :func:`read_encoded` is kept at
-    run granularity: only encoded ``run=`` dirs whose manifest run dir
-    carries a commit marker (``_SUCCESS``, written atomically after the
-    run's encoded files) are read; a manifest run dir WITHOUT a marker
-    means mid-commit death, where only the relational semi-join can
-    tell committed chunks apart — that case (and the ``partition_by``
-    nested layout) falls back to ``decode(read_encoded(...))``.
-
-    ``as_of`` time-travels to an earlier snapshot (snapshots.py): only
-    runs committed at seq <= as_of are scanned, and tombstones from
-    later compactions are not applied — the pre-rewrite chunks decode
-    as they stood. Raises if vacuum already deleted those bytes.
+    Which files and chunks to read comes from :func:`_visible`: only the
+    committed runs the snapshot shows are scanned (orphan and mid-commit
+    run dirs are invisible), chunks retired by the snapshot's tombstones
+    are dropped inside the file kernel via a per-run bitmap, and pending
+    equality deletes anti-join the decoded rows. ``as_of`` time-travels
+    to an earlier snapshot (snapshots.py): later runs and later
+    tombstones drop out, so pre-compaction chunks decode as they stood.
+    Raises ``ValueError`` naming the run when a visible run's live
+    chunks have no encoded files (vacuumed past ``as_of``, or lost).
     """
-    import os
-
     from . import schema as schema_mod
+    from . import sources
 
     all_cols = [c.name for c in spec.columns]
     cols = all_cols if columns is None else schema_mod.compute_used_columns(
         all_cols, columns=columns
     )
-    enc_base = _encoded_path(output_dir)
-    man_base = _manifest_path(output_dir)
-
-    def run_dirs(base: str) -> set[str]:
-        if not os.path.isdir(base):
-            return set()
-        return {d for d in os.listdir(base) if d.startswith("run=")}
-
-    if not os.path.isdir(enc_base) or "://" in output_dir:
-        if "://" in output_dir:  # non-local store: relational path only
-            return decode(read_encoded(spark, output_dir, as_of=as_of),
-                          cols, spec)
-        if as_of is not None:
-            snapshots.resolve(output_dir, as_of)  # raises if no log
+    vis = _visible(output_dir, as_of)
+    _require_readable(vis, output_dir)
+    if not vis.files:
         return spark.createDataFrame([], spec.spark_ddl(cols))
-    man_runs = run_dirs(man_base)
-    # manifest consolidation: absorbed runs have no run= dir anymore but
-    # their rows live in the generation file — committed by definition
-    cons = snapshots.latest_consolidation(output_dir)
-    absorbed = ({f"run={r}" for r in cons["absorbed"]}
-                if cons is not None else set())
-    man_runs |= absorbed
-    # snapshot visibility: an explicit as_of, or an active
-    # rollback/delete state (both replayed from the log); None = disk truth
-    vis = (snapshots.resolve(output_dir, as_of) if as_of is not None
-           else snapshots.current(output_dir))
     # equality deletes are row-level (merge-on-read): the key column
     # must be decoded to anti-join them, then projected away if the
     # caller didn't ask for it
-    need_del = vis is not None and bool(vis["deletes"])
-    dec_cols = cols if not need_del or spec.key in cols else [spec.key, *cols]
-
-    def finish(df: DataFrame) -> DataFrame:
-        if need_del:
-            df = _apply_deletes(spark, df, output_dir, vis, spec)
-            if dec_cols is not cols:
-                df = df.select(*cols)
-        return df
-
-    if vis is not None:
-        # only runs visible at this snapshot participate; a LATER run's
-        # missing commit marker must not force the fallback
-        man_runs = man_runs & {f"run={r}" for r in vis["runs"]}
-    root_success = os.path.exists(os.path.join(man_base, "_SUCCESS"))
-    committed = {
-        r for r in man_runs
-        if r in absorbed or root_success
-        or os.path.exists(os.path.join(man_base, r, "_SUCCESS"))
-    }
-    if man_runs - committed:
-        return finish(decode(read_encoded(spark, output_dir, as_of=as_of),
-                             dec_cols, spec))
-    if vis is not None:
-        man_vis = read_manifest(spark, output_dir, as_of=as_of)
-        if man_vis is None or {f"run={r}" for r in vis["runs"]} - man_runs:
-            # snapshot log names a run whose manifest dir is absent:
-            # inconsistent state — let the relational path sort it out
-            return finish(decode(read_encoded(spark, output_dir, as_of=as_of),
-                                 dec_cols, spec))
-        _check_reconstructable(spark, output_dir, man_vis, vis)
-    # compaction tombstones (committed writer runs only): per-target-run
-    # packed bitmaps of retired chunk_ids, applied inside the file kernel
-    # so a file holding both live and retired chunks decodes only the
-    # live ones; an uncommitted tombstone run (compaction died before
-    # its manifest commit) is invisible, like any orphan
-    drop_by_run: dict[str, np.ndarray] = {}
-    ts_base = _tombstones_path(output_dir)
-    for r in sorted(run_dirs(ts_base)):
-        if r not in committed:
-            continue
-        import pyarrow.parquet as _pq
-
-        t = _pq.read_table(os.path.join(ts_base, r),
-                           columns=["target_run", "chunk_id"])
-        tr = t.column("target_run").to_pylist()
-        cid = t.column("chunk_id").to_numpy(zero_copy_only=False)
-        for run_val in set(tr):
-            sel = cid[np.asarray(tr) == run_val].astype(np.int64)
-            key = f"run={run_val}"
-            need = (int(sel.max()) >> 3) + 1 if len(sel) else 1
-            bits = drop_by_run.get(key)
-            if bits is None or len(bits) < need:
-                grown = np.zeros(need, dtype=np.uint8)
-                if bits is not None:
-                    grown[: len(bits)] = bits
-                bits = grown
-            np.bitwise_or.at(bits, sel >> 3,
-                             (np.uint8(1) << (sel & 7).astype(np.uint8)))
-            drop_by_run[key] = bits
-    clean_files: list[str] = []
-    dropped_files: dict[str, list[str]] = {}
-    for r in sorted(run_dirs(enc_base) & committed):
-        d = os.path.join(enc_base, r)
-        for f in sorted(os.listdir(d)):
-            p = os.path.join(d, f)
-            if f.endswith(".parquet"):
-                if r in drop_by_run:
-                    dropped_files.setdefault(r, []).append(p)
-                else:
-                    clean_files.append(p)
-            elif os.path.isdir(p):
-                # partition_by nested layout: fall back
-                return finish(decode(read_encoded(spark, output_dir,
-                                                  as_of=as_of),
-                                     dec_cols, spec))
-    if not clean_files and not dropped_files:
-        return spark.createDataFrame([], spec.spark_ddl(cols))
-    from . import sources
-
+    dec_cols = (cols if not vis.deletes or spec.key in cols
+                else [spec.key, *cols])
     read_cols = ["chunk_id", "column", "n_rows", "status", "payload"]
     # physical projection: encoded files are clustered by (column,
     # chunk_id) (engine._enc_writer), so a skinny decode reads only the
@@ -903,27 +797,33 @@ def decode_frozen(spark: SparkSession, output_dir: str,
     if len(dec_cols) < len(all_cols):
         wanted = set(dec_cols)
         rg_sel = {}
-        for p in (*clean_files, *(f for fl in dropped_files.values()
-                                  for f in fl)):
-            rgs = sources.select_row_groups(p, "column", wanted)
-            if rgs is not None:
-                rg_sel[p] = rgs
-    legs = []
-    if clean_files:
-        legs.append(sources.arrow_scan_files(
-            spark, clean_files, read_cols,
-            _decode_files_kernel(dec_cols, spec), spec.spark_ddl(dec_cols),
-            row_groups=rg_sel))
-    for r, fl in sorted(dropped_files.items()):
-        legs.append(sources.arrow_scan_files(
-            spark, fl, read_cols,
-            _decode_files_kernel(dec_cols, spec,
-                                 drop_bits=drop_by_run[r].tobytes()),
-            spec.spark_ddl(dec_cols), row_groups=rg_sel))
+        for fl in vis.files.values():
+            for p in fl:
+                rgs = sources.select_row_groups(p, "column", wanted)
+                if rgs is not None:
+                    rg_sel[p] = rgs
+
+    def leg(files: list[str], drop_bits: bytes | None) -> DataFrame:
+        return sources.arrow_scan_files(
+            spark, files, read_cols,
+            _decode_files_kernel(dec_cols, spec, drop_bits=drop_bits),
+            spec.spark_ddl(dec_cols), row_groups=rg_sel)
+
+    # runs without retired chunks share one scan; each run with some
+    # gets its own leg carrying its drop bitmap
+    clean = [f for r in sorted(vis.files) if r not in vis.drop
+             for f in vis.files[r]]
+    legs = [leg(clean, None)] if clean else []
+    legs += [leg(vis.files[r], vis.drop[r].tobytes())
+             for r in sorted(vis.files.keys() & vis.drop.keys())]
     out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return finish(out)
+    for other in legs[1:]:
+        out = out.unionByName(other)
+    if vis.deletes:
+        out = _apply_deletes(spark, out, output_dir, vis.deletes, spec)
+        if dec_cols is not cols:
+            out = out.select(*cols)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -978,28 +878,18 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
     import math
     import shutil
 
-    if "://" in output_dir:
-        raise ValueError(
-            "manifest consolidation is the catalog's job on a real "
-            "object store (Iceberg rewrite_manifests)")
+    vis = _visible(output_dir)
     entries = snapshots.log(output_dir)
     if not entries:
         return dict(consolidated=False, reason="no snapshot log")
     logged_runs = {e["run"] for e in entries if e.get("run")}
-    cons = snapshots.latest_consolidation(output_dir)
+    cons = vis.cons
     prev_absorbed = cons["absorbed"] if cons else set()
-    man_base = _manifest_path(output_dir)
-    dirs = set()
-    if os.path.isdir(man_base):
-        dirs = {d[4:] for d in os.listdir(man_base) if d.startswith("run=")}
+    man_base = os.path.join(vis.root, "manifest")
+    gens_base = os.path.join(vis.root, "manifest_gens")
     # leftovers of a consolidation that died between commit and delete
-    stale = dirs & prev_absorbed
-    root_success = os.path.exists(os.path.join(man_base, "_SUCCESS"))
-    absorb = {
-        d for d in (dirs - stale) & logged_runs
-        if root_success
-        or os.path.exists(os.path.join(man_base, f"run={d}", "_SUCCESS"))
-    }
+    stale = vis.listed["manifest"] & prev_absorbed
+    absorb = (vis.committed - prev_absorbed) & logged_runs
     for d in stale:
         shutil.rmtree(os.path.join(man_base, f"run={d}"), ignore_errors=True)
     if not absorb:
@@ -1009,7 +899,8 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
     if cons is not None:
         legs.append(spark.read.parquet(
             f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}"))
-    dir_leg = _read_run_partitioned(spark, man_base).filter(
+    dir_leg = _read_run_partitioned(
+        spark, _manifest_path(output_dir)).filter(
         F.col("run").isin(sorted(absorb)))
     legs.append(dir_leg)
     df = legs[0]
@@ -1034,11 +925,9 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
     for d in absorb:
         shutil.rmtree(os.path.join(man_base, f"run={d}"), ignore_errors=True)
     if cons is not None:
-        shutil.rmtree(
-            f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}",
-            ignore_errors=True)
+        shutil.rmtree(os.path.join(gens_base, f"gen={cons['gen']}"),
+                      ignore_errors=True)
     # unreferenced gens (a prior consolidation died pre-commit)
-    gens_base = _manifest_gens_path(output_dir)
     for g in os.listdir(gens_base):
         if g.startswith("gen=") and g[4:] != new_gen:
             shutil.rmtree(os.path.join(gens_base, g), ignore_errors=True)
@@ -1063,17 +952,209 @@ def _deletes_path(output_dir: str) -> str:
     return f"{output_dir}/deletes"
 
 
+# ---------------------------------------------------------------------------
+# visibility: the one answer to "what does this snapshot show"
+# ---------------------------------------------------------------------------
+
+class _Visible(NamedTuple):
+    """What one snapshot of a frozen output shows (see :func:`_visible`)."""
+
+    runs: frozenset      # committed data runs visible at the snapshot
+    files: dict          # visible run -> its encoded parquet files
+    drop: dict           # run -> packed bitmap of chunk_ids retired by
+                         # the snapshot's tombstones
+    deletes: frozenset   # pending equality-delete runs
+    removed: frozenset   # runs whose payload a vacuum deleted
+    missing: dict        # visible run with live chunks but no files ->
+                         # likely cause
+    committed: frozenset  # every committed data run, at any snapshot
+    snapshot: bool       # the log overrides disk truth (as_of, rollback,
+                         # delete or branch state)
+    cons: dict | None    # latest manifest consolidation entry
+    listed: dict         # "manifest"/"encoded"/"tombstones"/"deletes" ->
+                         # run ids with a dir on disk
+    root: str            # the output's local path (file:// mapped)
+
+
+def _run_dirs(base: str) -> set[str]:
+    if not os.path.isdir(base):
+        return set()
+    return {d[len("run="):] for d in os.listdir(base) if d.startswith("run=")}
+
+
+def _parquet_files(run_dir: str) -> list[str]:
+    """Data files of one run dir, nested ``k=v`` partition dirs included."""
+    out: list[str] = []
+    for root, dirs, names in os.walk(run_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [os.path.join(root, n) for n in sorted(names)
+                if n.endswith(".parquet") and not n.startswith(("_", "."))]
+    return out
+
+
+def _set_bits(bits: np.ndarray | None, ids: np.ndarray) -> np.ndarray:
+    """OR ``ids`` into a packed little-endian bitmap, growing it."""
+    ids = ids.astype(np.int64)
+    need = (int(ids.max()) >> 3) + 1 if len(ids) else 1
+    if bits is None or len(bits) < need:
+        grown = np.zeros(need, dtype=np.uint8)
+        if bits is not None:
+            grown[: len(bits)] = bits
+        bits = grown
+    np.bitwise_or.at(bits, ids >> 3, np.uint8(1) << (ids & 7).astype(np.uint8))
+    return bits
+
+
+def _test_bits(bits: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Per-id membership in a packed little-endian bitmap."""
+    ids = ids.astype(np.int64)
+    hit = np.zeros(len(ids), dtype=bool)
+    inside = (ids >= 0) & (ids < (len(bits) << 3))
+    i = ids[inside]
+    hit[inside] = (bits[i >> 3] >> (i & 7).astype(np.uint8)) & 1 == 1
+    return hit
+
+
+def _bit_ids(bits: np.ndarray) -> np.ndarray:
+    """The ids set in a packed little-endian bitmap."""
+    nz = np.flatnonzero(bits)
+    row, bit = np.nonzero(
+        np.unpackbits(bits[nz], bitorder="little").reshape(-1, 8))
+    return nz[row].astype(np.int64) * 8 + bit
+
+
+def _visible(output_dir: str, as_of: int | str | None = None) -> _Visible:
+    """Resolve what a snapshot shows, on the driver, with no Spark job.
+
+    Every reader and maintenance operation takes its visibility from
+    here; the rules live nowhere else:
+
+    - **committed**: a run's manifest ``run=`` dir carries ``_SUCCESS``
+      (written after its rows; or the manifest root has one), or the
+      latest consolidation absorbed it. A dir without the marker is a
+      writer that died mid-commit — invisible on every path, so resume
+      re-encodes its chunks.
+    - **snapshot**: ``snapshots.resolve(as_of)`` when given, otherwise
+      ``snapshots.current()``, where None means the disk is the truth.
+      Visible runs are the committed runs the snapshot names.
+    - **tombstones**: a tombstone counts only if its writer run is
+      visible (committed and named by the snapshot) — zero-row purge
+      runs included, since their empty manifest dir still commits.
+      Counted tombstones become one packed chunk_id bitmap per target
+      run (the same form as the resume bitmap).
+    - **readable**: a visible run whose encoded dir is missing or holds
+      no parquet file is unreadable unless every ok chunk its manifest
+      lists is retired at this snapshot (a pyarrow read of that run's
+      manifest chunk ids, only for such runs); ``missing`` names the
+      likely cause and :func:`_require_readable` raises on it.
+
+    Inputs are the snapshot log, the run-dir listings and pyarrow reads
+    of the counted tombstone files. Outputs are local paths or
+    ``file://`` URLs; any other scheme raises here, once.
+    """
+    import pyarrow.parquet as pq
+
+    root = snapshots.local_path(output_dir)
+    if root is None:
+        raise ValueError(
+            f"{output_dir!r}: frozen outputs live on a local or file:// "
+            "path (no object-store connector is installed; on a real "
+            "catalog, visibility is the catalog's job)")
+    snap = (snapshots.resolve(output_dir, as_of) if as_of is not None
+            else snapshots.current(output_dir))
+    cons = snapshots.latest_consolidation(output_dir)
+    listed = {name: _run_dirs(os.path.join(root, name))
+              for name in ("manifest", "encoded", "tombstones", "deletes")}
+    man_base = os.path.join(root, "manifest")
+    root_ok = os.path.exists(os.path.join(man_base, "_SUCCESS"))
+    committed = frozenset(
+        {r for r in listed["manifest"] if root_ok or os.path.exists(
+            os.path.join(man_base, f"run={r}", "_SUCCESS"))}
+        | (cons["absorbed"] if cons is not None else set()))
+    runs = committed if snap is None else committed & snap["runs"]
+    removed = frozenset(snap["removed"] if snap is not None
+                        else snapshots.vacuumed(snapshots.log(output_dir)))
+    drop: dict[str, np.ndarray] = {}
+    for w in sorted(runs & listed["tombstones"]):
+        t = pq.read_table(os.path.join(root, "tombstones", f"run={w}"),
+                          columns=["target_run", "chunk_id"])
+        target = np.asarray(t.column("target_run").to_pylist(), dtype=object)
+        cid = t.column("chunk_id").to_numpy(zero_copy_only=False)
+        for r in set(target):
+            drop[r] = _set_bits(drop.get(r), cid[target == r])
+    files = {}
+    for r in sorted(runs & listed["encoded"]):
+        fl = _parquet_files(os.path.join(root, "encoded", f"run={r}"))
+        if fl:
+            files[r] = fl
+    missing = {}
+    for r, cid in _ok_chunk_ids(output_dir, root, runs - files.keys(),
+                                cons).items():
+        if len(cid) and (r not in drop or not _test_bits(drop[r], cid).all()):
+            missing[r] = ("vacuumed, as_of predates it" if r in removed
+                          else "lost or never written")
+    return _Visible(
+        runs=runs, files=files, drop=drop,
+        deletes=frozenset(snap["deletes"] if snap is not None else ()),
+        removed=removed, missing=missing, committed=committed,
+        snapshot=snap is not None, cons=cons, listed=listed, root=root)
+
+
+def _ok_chunk_ids(output_dir: str, root: str, runs: set[str],
+                  cons: dict | None) -> dict[str, np.ndarray]:
+    """Ok chunk_ids each run's manifest lists (pyarrow, driver-side)."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, np.ndarray] = {}
+    in_gen = sorted(runs & cons["absorbed"]) if cons is not None else []
+    if in_gen:
+        gen_dir = os.path.join(root, "manifest_gens", f"gen={cons['gen']}")
+        try:
+            t = pq.read_table(gen_dir, columns=["run", "chunk_id"],
+                              filters=[("run", "in", in_gen),
+                                       ("status", "=", "ok")])
+        except (OSError, pa.ArrowInvalid) as e:
+            raise _gen_unreadable(output_dir, cons) from e
+        run = np.asarray(t.column("run").to_pylist(), dtype=object)
+        cid = t.column("chunk_id").to_numpy(zero_copy_only=False)
+        out.update({r: cid[run == r] for r in in_gen})
+    for r in sorted(runs - set(in_gen)):
+        try:
+            t = pq.read_table(os.path.join(root, "manifest", f"run={r}"),
+                              columns=["chunk_id", "status"])
+        except (OSError, pa.ArrowInvalid):
+            continue  # a zero-row rewrite's manifest holds no data file
+        t = t.filter(pc.equal(t.column("status"), "ok"))
+        out[r] = t.column("chunk_id").to_numpy(zero_copy_only=False)
+    return out
+
+
+def _gen_unreadable(output_dir: str, cons: dict) -> ValueError:
+    return ValueError(
+        f"manifest generation {cons['gen']!r} referenced by snapshot "
+        f"{cons['seq']} is unreadable under "
+        f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}")
+
+
+def _require_readable(vis: _Visible, output_dir: str) -> None:
+    """Raise when a visible run's live chunks have no payload files."""
+    if vis.missing:
+        raise ValueError(
+            f"snapshot of {output_dir} not readable: visible run(s) hold "
+            "live chunks but no encoded files — " + "; ".join(
+                f"run {r}: {cause}" for r, cause in sorted(vis.missing.items())))
+
+
 def _apply_deletes(spark: SparkSession, df: DataFrame, output_dir: str,
-                   vis: dict, spec: TableSpec) -> DataFrame:
-    """Anti-join the snapshot's visible equality-delete keys.
+                   deletes: frozenset, spec: TableSpec) -> DataFrame:
+    """Anti-join the snapshot's pending equality-delete keys.
 
     Merge-on-read: delete runs are key files (engine.delete_where),
     applied at read time. No broadcast hint — AQE broadcasts small
     delete sets itself, and a billion-key delete set must shuffle."""
-    if not vis.get("deletes"):
+    if not deletes:
         return df
-    paths = [f"{_deletes_path(output_dir)}/run={r}"
-             for r in sorted(vis["deletes"])]
+    paths = [f"{_deletes_path(output_dir)}/run={r}" for r in sorted(deletes)]
     dk = spark.read.parquet(*paths).select(spec.key).distinct()
     return df.join(dk, spec.key, "left_anti")
 
@@ -1099,9 +1180,6 @@ def delete_where(
     operation (contamination removal, dedup application) the mission
     adds on top.
     """
-    if "://" in output_dir:
-        raise ValueError("delete_where needs the local snapshot log; on a "
-                         "real catalog this maps to Iceberg DELETE FROM")
     if keys is None and not filters:
         raise ValueError("specify keys= and/or filters= (a full-table "
                          "delete must be spelled out, e.g. keys=':latest')")
@@ -1239,8 +1317,7 @@ def read_changes(
             raise ValueError(
                 f"changelog cannot attribute row changes through "
                 f"kind={k!r} (seq {e['seq']})")
-    removed = {r for e in entries if e["kind"] == "vacuum"
-               for r in e.get("removed_runs", [])}
+    removed = snapshots.vacuumed(entries)
     gone = [e for e in ins_entries if e["run"] in removed]
     if gone:
         raise ValueError(
@@ -1287,18 +1364,25 @@ def read_changes(
 def verify_output(spark: SparkSession, output_dir: str) -> dict:
     """Structural audit of a frozen output (fsck / Iceberg verify analog).
 
-    Cross-checks the four metadata surfaces against each other and the
-    encoded files — all metadata-column reads, no payload decode:
+    Cross-checks the metadata surfaces against each other and the
+    encoded files — all metadata-column reads, no payload decode. Live
+    chunks are the ones the current snapshot shows (:func:`_visible`):
+    committed, visible runs minus the chunks its tombstones retire, so a
+    rolled-back compaction's tombstones cannot mask missing payload.
 
-    - every committed ok manifest row has its encoded row (missing
-      payload = corruption, ``n_missing_payload``);
+    - every live ok manifest row has its encoded row (missing payload =
+      corruption, ``n_missing_payload``; ``missing_payload_runs`` names
+      the runs);
+    - a visible run with live chunks but no encoded files is named in
+      ``unreadable_runs`` with its likely cause (vacuumed, or lost);
+      those without a vacuum record also land in
+      ``unaccounted_missing_dirs``;
     - encoded rows without a manifest row are orphans (invisible by
       design — reported, not an error, ``n_orphan_rows``);
     - tombstones must target rows that exist in the manifest
       (``n_dangling_tombstones``);
     - every data/delete run named by the snapshot log must have its
-      manifest dir / delete files (``missing_runs``/
-      ``missing_delete_runs``) unless vacuum recorded its removal;
+      manifest / delete files (``missing_runs``/``missing_delete_runs``);
     - duplicate ok rows for one (run, chunk, column) would decode a
       chunk twice (``n_duplicate_rows``);
     - failed chunks are counted (informational — resume retries them).
@@ -1306,31 +1390,29 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     Returns a dict with ``status`` 'ok' (clean), 'warn' (only
     informational findings) or 'corrupt'.
     """
-    import os
-
     report: dict = {}
-    man = read_manifest(spark, output_dir, raw=True)
+    vis = _visible(output_dir)
+    man = _read_manifest(spark, output_dir, vis, raw=True)
     if man is None:
         report.update(status="ok", empty=True)
         return report
-    keys4 = ["run", "partition_id", "chunk_id", "column"]
+    keys3 = ["run", "partition_id", "chunk_id"]
+    keys4 = [*keys3, "column"]
     ok = man.filter(F.col("status") == "ok").select(*keys4)
     try:
         enc = _read_run_partitioned(
             spark, _encoded_path(output_dir)).select(*keys4)
     except Exception:
         enc = ok.limit(0)
-    # missing payload is corruption only for LIVE chunks: a chunk every
-    # committed tombstone retires keeps its (append-only) manifest row
-    # while vacuum legitimately reclaims its bytes once the whole run
-    # dir is dead — the streaming-cadence soak (compact + consolidate +
-    # checkpoint + vacuum) hits exactly that state, and raw-ok rows
-    # would report every reclaimed chunk as corrupt
-    live_keys = _visible_ok_keys(spark, output_dir, man)
-    ok_live = ok.join(F.broadcast(live_keys),
-                      ["run", "partition_id", "chunk_id"], "left_semi")
-    report["n_missing_payload"] = ok_live.join(
-        enc, keys4, "left_anti").count()
+    # only LIVE chunks must have payload: a chunk a visible tombstone
+    # retires keeps its (append-only) manifest row while vacuum
+    # legitimately reclaims its bytes
+    live = _visible_ok_keys(spark, vis, _restrict(man, vis))
+    lost = (ok.join(F.broadcast(live), keys3, "left_semi")
+            .join(enc, keys4, "left_anti")
+            .groupBy("run").count().collect())
+    report["n_missing_payload"] = sum(r["count"] for r in lost)
+    report["missing_payload_runs"] = sorted(r["run"] for r in lost)
     report["n_orphan_rows"] = enc.join(ok, keys4, "left_anti").count()
     report["n_duplicate_rows"] = (
         ok.groupBy(*keys4).count().filter(F.col("count") > 1).count())
@@ -1339,51 +1421,33 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     if ts is not None:
         targets = ts.select(F.col("target_run").alias("run"),
                             "partition_id", "chunk_id")
-        have = man.select("run", "partition_id", "chunk_id").distinct()
+        have = man.select(*keys3).distinct()
         report["n_dangling_tombstones"] = targets.join(
-            have, ["run", "partition_id", "chunk_id"], "left_anti").count()
+            have, keys3, "left_anti").count()
     report["n_failed_chunks"] = man.filter(
         F.col("status") != "ok").select("run", "chunk_id").distinct().count()
-    entries = snapshots.log(output_dir) if "://" not in output_dir else []
+    entries = snapshots.log(output_dir)
     man_runs = {r["run"] for r in man.select("run").distinct().collect()}
-    removed = {r for e in entries if e["kind"] == "vacuum"
-               for r in e.get("removed_runs", [])}
-    # a zero-survivor purge commits an EMPTY manifest (no rows, but the
-    # run dir + _SUCCESS exist) — such entries record n_new_chunks=0 in
-    # the log, and ONLY those may satisfy the check via a bare run dir.
-    # An append/rewrite whose manifest parquet was lost (dir present,
-    # rows gone) must still read as corrupt, so the dir-based exemption
-    # is gated on the recorded chunk count, not on the entry kind.
-    man_base = _manifest_path(output_dir)
-    man_dirs = ({d[len("run="):] for d in os.listdir(man_base)
-                 if d.startswith("run=")}
-                if os.path.isdir(man_base) else set())
+    # a zero-survivor purge commits an EMPTY manifest (no rows, but a
+    # committed run dir) — such entries record n_new_chunks=0 in the
+    # log, and ONLY those may pass with no manifest rows. An
+    # append/rewrite whose manifest parquet was lost (dir present, rows
+    # gone) must still read as corrupt, so the exemption is gated on the
+    # recorded chunk count, not on the entry kind.
     report["missing_runs"] = sorted(
         e["run"] for e in entries
         if e["kind"] in ("append", "rewrite", "purge") and e["run"]
         and e["run"] not in man_runs
-        and not (e.get("n_new_chunks") == 0 and e["run"] in man_dirs)
+        and not (e.get("n_new_chunks") == 0 and e["run"] in vis.committed)
     )
     report["missing_delete_runs"] = sorted(
         e["run"] for e in entries
         if e["kind"] == "delete" and e["run"]
-        and not os.path.isdir(
-            f"{_deletes_path(output_dir)}/run={e['run']}")
+        and e["run"] not in vis.listed["deletes"]
     )
-    # visible runs whose payload bytes are gone without a vacuum record
-    enc_base = _encoded_path(output_dir)
-    present = set()
-    if os.path.isdir(enc_base):
-        present = {d[4:] for d in os.listdir(enc_base)
-                   if d.startswith("run=")}
-    live_runs = {
-        r["run"] for r in
-        _visible_ok_keys(spark, output_dir,
-                         read_manifest(spark, output_dir))
-        .select("run").distinct().collect()
-    }
+    report["unreadable_runs"] = dict(sorted(vis.missing.items()))
     report["unaccounted_missing_dirs"] = sorted(
-        (live_runs - present) - removed)
+        r for r in vis.missing if r not in vis.removed)
     errors = (
         report["n_missing_payload"] or report["n_duplicate_rows"]
         or report["missing_runs"] or report["missing_delete_runs"]
@@ -1610,11 +1674,10 @@ def upsert(
         raise ValueError(
             f"upsert batch has duplicate keys ({n_batch} rows, "
             f"{n_batch_keys} distinct {spec.key})")
-    if "://" not in output_dir:
-        vis = snapshots.current(output_dir)
-        if vis is not None and vis["deletes"]:
-            purge_deletes(spark, output_dir, target_tokens, spec)
-    man = read_manifest(spark, output_dir)
+    if _visible(output_dir).deletes:
+        purge_deletes(spark, output_dir, target_tokens, spec)
+    vis = _visible(output_dir)
+    man = _read_manifest(spark, output_dir, vis)
     if man is None:
         # empty table: the merge degenerates to a plain freeze append
         summary = freeze(spark, input_path, output_dir,
@@ -1629,15 +1692,13 @@ def upsert(
     bkeys = batch.select(spec.key).localCheckpoint()
     # consumed three times (count, payload semi-join, tombstone write):
     # pin the chunk set once
-    affected = _affected_chunks(spark, output_dir, man, bkeys, spec) \
+    affected = _affected_chunks(spark, output_dir, vis, man, bkeys, spec) \
         .localCheckpoint()
     n_affected = affected.count()
     old_rows = spark.createDataFrame([], spec.spark_ddl())
     if n_affected:
-        enc_subset = read_encoded(spark, output_dir).join(
-            F.broadcast(affected), ["run", "partition_id", "chunk_id"],
-            "left_semi")
-        old_rows = decode(enc_subset, spec=spec)
+        old_rows = decode(_chunk_subset(spark, output_dir, vis, affected),
+                          spec=spec)
     survivors = old_rows.join(bkeys, spec.key, "left_anti")
     merged = survivors.select(*all_cols).unionByName(batch).localCheckpoint()
     n_old = old_rows.count()
@@ -1672,8 +1733,9 @@ def upsert(
     return summary
 
 
-def _affected_chunks(spark: SparkSession, output_dir: str, man: DataFrame,
-                     keys_df: DataFrame, spec: TableSpec) -> DataFrame:
+def _affected_chunks(spark: SparkSession, output_dir: str, vis: _Visible,
+                     man: DataFrame, keys_df: DataFrame,
+                     spec: TableSpec) -> DataFrame:
     """Live chunks that can contain any of the given key values.
 
     Zone-map range join first (numeric compare when the key has a
@@ -1691,7 +1753,7 @@ def _affected_chunks(spark: SparkSession, output_dir: str, man: DataFrame,
     except ValueError:
         k_num = F.col(spec.key).cast("string")
         kmin_e, kmax_e = F.col("min_doc_id"), F.col("max_doc_id")
-    live = _visible_ok_keys(spark, output_dir, man)
+    live = _visible_ok_keys(spark, vis, man)
     ranges_df = man.filter(
         (F.col("status") == "ok") & (F.col("column") == payload_col)
     ).select("run", "partition_id", "chunk_id",
@@ -1737,40 +1799,36 @@ def purge_deletes(
     t_start = time.perf_counter()
     no_op = dict(snapshot=None, run=None, n_rewritten=0, n_purged_rows=0,
                  wall_s=0.0)
-    vis = snapshots.current(output_dir) if "://" not in output_dir else None
-    if vis is None or not vis["deletes"]:
+    vis = _visible(output_dir)
+    if not vis.deletes:
         return no_op
-    man = read_manifest(spark, output_dir)  # current-visible rows
+    man = _read_manifest(spark, output_dir, vis)  # current-visible rows
     if man is None:
         return no_op
-    payload_col = spec.list_column or spec.key
-    dk_paths = [f"{_deletes_path(output_dir)}/run={r}"
-                for r in sorted(vis["deletes"])]
+    purged = sorted(vis.deletes)
+    dk_paths = [f"{_deletes_path(output_dir)}/run={r}" for r in purged]
     dk = spark.read.parquet(*dk_paths).select(spec.key).distinct()
-    affected = _affected_chunks(spark, output_dir, man, dk, spec) \
+    affected = _affected_chunks(spark, output_dir, vis, man, dk, spec) \
         .localCheckpoint()
     n_affected = affected.count()
     if n_affected == 0:
         # keys match nothing physical (already purged / never existed):
         # still retire the delete runs so reads stop anti-joining
         snap = snapshots.commit(output_dir, None, "purge",
-                                purged_deletes=sorted(vis["deletes"]))
+                                purged_deletes=purged)
         return dict(snapshot=snap, run=None, n_rewritten=0, n_purged_rows=0,
                     wall_s=time.perf_counter() - t_start)
-    enc_subset = read_encoded(spark, output_dir).join(
-        F.broadcast(affected), ["run", "partition_id", "chunk_id"],
-        "left_semi")
-    rows = decode(enc_subset, spec=spec)
+    rows = decode(_chunk_subset(spark, output_dir, vis, affected), spec=spec)
     keep = rows.join(dk, spec.key, "left_anti").localCheckpoint()
     n_before = rows.count()
     n_keep = keep.count()
     if n_keep == 0:
         # nothing survives the rewrite: commit a deletes-only snapshot —
         # tombstones for the affected chunks plus an EMPTY manifest for
-        # the writer run. Manifest rows ARE the commit carrier
-        # (_visible_ok_keys treats a tombstone run as visible iff its
-        # manifest run committed), so the zero-row manifest write is
-        # exactly what makes the tombstones visible: Iceberg's rewrite
+        # the writer run. The manifest dir's commit marker is what makes
+        # a run committed (_visible counts a tombstone iff its writer
+        # run is committed and visible), so the zero-row manifest write
+        # is exactly what makes the tombstones visible: Iceberg's rewrite
         # that adds zero files and deletes N. The old behavior kept
         # merge-on-read forever here, and the suite's 'purged' pin only
         # passed when key-bloom false positives happened to drag
@@ -1789,7 +1847,7 @@ def purge_deletes(
         # zero-chunk rewrite may pass the missing_runs check via a bare
         # run dir; a lost append/rewrite manifest must stay corrupt)
         snap = snapshots.commit(output_dir, run_id, "purge",
-                                purged_deletes=sorted(vis["deletes"]),
+                                purged_deletes=purged,
                                 n_retired=n_affected, n_new_chunks=0)
         return dict(snapshot=snap, run=run_id, n_rewritten=n_affected,
                     n_new_chunks=0, n_purged_rows=n_before,
@@ -1808,8 +1866,7 @@ def purge_deletes(
         "plan_id", F.lit(_plan_fingerprint(plan))
     ).write.mode("error").parquet(man_dir)
     snap = snapshots.commit(output_dir, run_id, "purge",
-                            purged_deletes=sorted(vis["deletes"]),
-                            n_retired=n_affected)
+                            purged_deletes=purged, n_retired=n_affected)
     summary = dict(
         snapshot=snap, run=run_id, n_rewritten=n_affected,
         n_new_chunks=plan.n_chunks, n_purged_rows=n_before - n_keep,
@@ -1837,8 +1894,12 @@ def _new_run_id() -> str:
     return "r" + uuid.uuid4().hex[:11]
 
 
-def _read_run_partitioned(spark: SparkSession, path: str) -> DataFrame:
+def _read_run_partitioned(spark: SparkSession, path: str,
+                          run_paths: list[str] | None = None) -> DataFrame:
     """Read a run=-partitioned layout with ``run`` guaranteed string.
+
+    ``run_paths`` restricts the read to those ``run=`` dirs under
+    ``path`` (which stays the partition-discovery base).
 
     Belt to _new_run_id's suspenders: partition-value inference mangles
     numeric-looking legacy run ids (value AND type). When inference
@@ -1850,14 +1911,17 @@ def _read_run_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """
     from pyspark.sql.types import StringType, StructField, StructType
 
-    df = spark.read.parquet(path)
+    reader = (spark.read if run_paths is None
+              else spark.read.option("basePath", path))
+    paths = [path] if run_paths is None else run_paths
+    df = reader.parquet(*paths)
     if "run" in df.columns and not isinstance(
             df.schema["run"].dataType, StringType):
         fields = [
             StructField("run", StringType(), True) if f.name == "run" else f
             for f in df.schema.fields
         ]
-        df = spark.read.schema(StructType(fields)).parquet(path)
+        df = reader.schema(StructType(fields)).parquet(*paths)
     return df
 
 
@@ -1880,22 +1944,24 @@ def _read_tombstones(spark: SparkSession, output_dir: str) -> DataFrame | None:
 def read_manifest(spark: SparkSession, output_dir: str,
                   as_of: int | str | None = None,
                   raw: bool = False) -> DataFrame | None:
-    """Manifest rows; ``as_of`` restricts to runs committed at seq <= as_of.
+    """Manifest rows of the runs a snapshot shows (None: no manifest).
 
-    With ``as_of`` the append-only manifest is filtered through the
-    snapshot log (snapshots.py) — later appends, later compactions'
-    rewrite runs, and their tombstone writers all drop out, which is
-    what makes every downstream read snapshot-isolated. Without
-    ``as_of``, an active rollback (snapshots.current) filters the same
-    way, so resume/compact/reads all agree on the rolled-back state;
-    ``raw=True`` bypasses both (filesystem truth — vacuum's view).
+    Visibility comes from :func:`_visible`: the committed runs named by
+    ``as_of``'s snapshot, or by the current one (an active rollback,
+    delete or branch state), or — with no snapshot state — every
+    committed run. A manifest run dir without its ``_SUCCESS`` marker is
+    uncommitted, so its rows drop out here and resume re-encodes its
+    chunks. ``raw=True`` returns every row on disk (filesystem truth —
+    the audit view).
     """
-    man_path = _manifest_path(output_dir)
-    cons = snapshots.latest_consolidation(output_dir)
-    if cons is None and "://" not in output_dir and not os.path.isdir(man_path):
-        # probing a not-yet-created output through the JVM reader dumps
-        # an AnalysisException stack trace into the executor log even
-        # though we swallow it — answer the common local case silently
+    return _read_manifest(spark, output_dir,
+                          _visible(output_dir, None if raw else as_of), raw)
+
+
+def _read_manifest(spark: SparkSession, output_dir: str, vis: _Visible,
+                   raw: bool = False) -> DataFrame | None:
+    cons = vis.cons
+    if cons is None and not vis.listed["manifest"]:
         return None
     legs = []
     if cons is not None:
@@ -1903,150 +1969,104 @@ def read_manifest(spark: SparkSession, output_dir: str,
         # `run` as an ordinary (string) column. A gen the log references
         # but whose bytes are gone is metadata corruption — raise rather
         # than silently dropping every absorbed run's manifest.
-        gen_dir = f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}"
         try:
-            legs.append(spark.read.parquet(gen_dir))
+            legs.append(spark.read.parquet(
+                f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}"))
         except Exception as e:
-            raise ValueError(
-                f"manifest generation {cons['gen']!r} referenced by "
-                f"snapshot {cons['seq']} is unreadable under "
-                f"{gen_dir!r}") from e
-    dir_leg = None
-    if "://" in output_dir or os.path.isdir(man_path):
+            raise _gen_unreadable(output_dir, cons) from e
+    if vis.listed["manifest"]:
         try:
-            dir_leg = _read_run_partitioned(spark, man_path)
+            dir_leg = _read_run_partitioned(spark, _manifest_path(output_dir))
         except Exception:
             dir_leg = None
-    if dir_leg is not None and cons is not None and cons["absorbed"]:
-        # absorbed dirs are deleted right after the consolidate commit;
-        # this filter is the crash-window safety net (commit landed,
-        # delete didn't) that keeps their rows from counting twice
-        dir_leg = dir_leg.filter(
-            ~F.col("run").isin(sorted(cons["absorbed"])))
-    if dir_leg is not None:
-        legs.append(dir_leg)
+        if dir_leg is not None and cons is not None and cons["absorbed"]:
+            # absorbed dirs are deleted right after the consolidate
+            # commit; this filter is the crash-window safety net (commit
+            # landed, delete didn't) that keeps their rows from counting
+            # twice
+            dir_leg = dir_leg.filter(
+                ~F.col("run").isin(sorted(cons["absorbed"])))
+        if dir_leg is not None:
+            legs.append(dir_leg)
     if not legs:
         return None
     man = legs[0]
     for leg in legs[1:]:
         man = man.unionByName(leg, allowMissingColumns=True)
-    if raw:
+    return man if raw else _restrict(man, vis)
+
+
+def _restrict(man: DataFrame, vis: _Visible) -> DataFrame:
+    """Manifest rows of the visible runs only (no-op when every run on
+    disk is visible — the common case keeps its plan unchanged)."""
+    on_disk = vis.listed["manifest"] | (
+        vis.cons["absorbed"] if vis.cons is not None else set())
+    if vis.runs == on_disk:
         return man
-    vis = None
-    if as_of is not None:
-        vis = snapshots.resolve(output_dir, as_of)
-    elif "://" not in output_dir:
-        vis = snapshots.current(output_dir)
-    if vis is not None:
-        man = man.filter(F.col("run").isin(sorted(vis["runs"])))
-    return man
-
-
-def _check_reconstructable(spark: SparkSession, output_dir: str,
-                           man_vis: DataFrame, vis: dict) -> None:
-    """Raise if a time-travel read needs payload bytes vacuum deleted.
-
-    A visible run whose ``encoded/run=`` dir is gone is fine as long as
-    every one of its chunks is retired by a tombstone visible at the
-    same snapshot (the vacuum precondition); a LIVE chunk in a deleted
-    dir means the requested snapshot predates the compaction whose
-    vacuum removed the bytes — the Iceberg contract that
-    expire_snapshots forfeits time travel past it.
-    """
-    import os
-
-    base = _encoded_path(output_dir)
-    present = set()
-    if os.path.isdir(base):
-        present = {d[4:] for d in os.listdir(base) if d.startswith("run=")}
-    missing = vis["runs"] - present
-    if not missing:
-        return
-    # pass the SNAPSHOT's run set: without it _visible_ok_keys falls
-    # back to snapshots.current for tombstone-writer visibility, so a
-    # LATER deletes-only purge would retire this snapshot's chunks and
-    # silently suppress the reconstructability error on an as_of read
-    live = _visible_ok_keys(spark, output_dir, man_vis,
-                            vis_runs=vis["runs"]).filter(
-        F.col("run").isin(sorted(missing)))
-    if live.limit(1).count():
-        raise ValueError(
-            f"snapshot not reconstructable: run(s) {sorted(missing)} were "
-            "vacuumed but still hold live chunks at this snapshot "
-            "(expire_snapshots forfeits time travel past it)")
+    return man.filter(F.col("run").isin(sorted(vis.runs)))
 
 
 def read_encoded(spark: SparkSession, output_dir: str,
                  as_of: int | str | None = None) -> DataFrame:
-    """Committed chunks only: encoded rows whose chunk is in the manifest.
+    """Committed, live encoded rows: the reference read for the
+    relational ``decode``.
 
-    A run that died between writing encoded files and committing its
-    manifest leaves orphan files; the semi-join makes them invisible —
-    the atomicity discipline of the reference's tmp-rename
-    (/root/reference/crates/freeze/src/types/dataframes/export.rs:13-23)
-    done relationally. ``as_of`` reads the table at an earlier snapshot
-    (snapshots.py), raising if vacuum already deleted those bytes.
+    Reads only the files of the runs :func:`_visible` shows, then
+    semi-joins them with the live manifest keys — so orphan files of a
+    run that died before its commit, mid-commit runs, and chunks
+    retired by the snapshot's tombstones are all invisible (the
+    atomicity discipline of the reference's tmp-rename,
+    crates/freeze/src/types/dataframes/export.rs:13-23, done
+    relationally). ``as_of`` reads the table at an earlier
+    snapshot (snapshots.py). Raises ``ValueError`` naming the run when a
+    visible run's live chunks have no encoded files.
     """
-    try:
-        enc = _read_run_partitioned(spark, _encoded_path(output_dir))
-    except Exception:
-        # an empty-input freeze commits nothing: no encoded dir is a
-        # valid (empty) output, not an error
-        return spark.createDataFrame([], ENCODED_DDL + ", run string")
-    man = read_manifest(spark, output_dir, as_of=as_of)
-    if man is None:
-        return enc.limit(0)
-    if "://" not in output_dir:
-        vis = (snapshots.resolve(output_dir, as_of) if as_of is not None
-               else snapshots.current(output_dir))
-        if vis is not None:
-            _check_reconstructable(spark, output_dir, man, vis)
-    keys = _visible_ok_keys(
-        spark, output_dir, man,
-        vis_runs=(vis["runs"] if ("://" not in output_dir
-                                  and vis is not None) else None))
-    return enc.join(F.broadcast(keys), ["run", "partition_id", "chunk_id"], "left_semi")
+    vis = _visible(output_dir, as_of)
+    man = _read_manifest(spark, output_dir, vis)
+    keys = None if man is None else _visible_ok_keys(spark, vis, man)
+    return _chunk_subset(spark, output_dir, vis, keys)
 
 
-def _visible_ok_keys(spark: SparkSession, output_dir: str,
-                     man: DataFrame,
-                     vis_runs: set[str] | None = None) -> DataFrame:
-    """Distinct (run, partition_id, chunk_id) of live committed chunks.
+def _visible_ok_keys(spark: SparkSession, vis: _Visible,
+                     man: DataFrame) -> DataFrame:
+    """Distinct (run, partition_id, chunk_id) of the live chunks in ``man``.
 
-    Committed = an ok manifest row exists; live = not retired by a
-    visible compaction tombstone. A tombstone run is visible iff its own
-    manifest run committed (manifest rows ARE the commit); visible
-    tombstones retire the chunk they target via an anti-join — the
-    deletion analog of the orphan-invisibility semi-join.
+    Live = an ok manifest row, not retired by a tombstone the snapshot
+    counts (``vis.drop``, decided by :func:`_visible`). The retired ids
+    ride as a driver-built local relation, so the anti-join reads no
+    tombstone file through Spark. Callers pass visible manifest rows.
     """
     keys = man.filter(F.col("status") == "ok").select(
         "run", "partition_id", "chunk_id"
     ).distinct()
-    ts = _read_tombstones(spark, output_dir)
-    if ts is not None:
-        committed_runs = man.select("run").distinct()
-        if vis_runs is None and "://" not in output_dir:
-            cur = snapshots.current(output_dir)
-            vis_runs = cur["runs"] if cur is not None else None
-        if vis_runs:
-            # a deletes-only rewrite (purge with zero survivors) commits
-            # an EMPTY manifest: the run dir + snapshot-log entry exist
-            # but contribute no manifest rows, so the log is the commit
-            # truth for its tombstones — union the SNAPSHOT-VISIBLE run
-            # set (the caller's as_of-resolved set when time traveling,
-            # so a pre-purge read never sees the purge's tombstones)
-            committed_runs = committed_runs.union(
-                spark.createDataFrame(
-                    [(r,) for r in sorted(vis_runs)], "run string")
-            ).distinct()
-        vis = ts.withColumnRenamed("run", "writer_run").join(
-            committed_runs.withColumnRenamed("run", "writer_run"),
-            "writer_run", "left_semi",
-        ).select(F.col("target_run").alias("run"),
-                 "partition_id", "chunk_id")
-        keys = keys.join(F.broadcast(vis),
-                         ["run", "partition_id", "chunk_id"], "left_anti")
-    return keys
+    if not vis.drop:
+        return keys
+    ids = {r: _bit_ids(b) for r, b in sorted(vis.drop.items())}
+    retired = spark.createDataFrame(pa.table({
+        "run": pa.array(np.repeat(list(ids), [len(v) for v in ids.values()]),
+                        pa.string()),
+        "chunk_id": pa.array(np.concatenate(list(ids.values())), pa.int32()),
+    }))
+    return keys.join(F.broadcast(retired), ["run", "chunk_id"],
+                     "left_anti").select("run", "partition_id", "chunk_id")
+
+
+def _chunk_subset(spark: SparkSession, output_dir: str, vis: _Visible,
+                  keys: DataFrame | None) -> DataFrame:
+    """Encoded rows of the given live (run, partition_id, chunk_id) keys
+    (None: no manifest, so none) — what read_encoded returns and what a
+    rewrite (compact, purge, upsert) decodes."""
+    _require_readable(vis, output_dir)
+    if not vis.files or keys is None:
+        # an empty-input freeze commits nothing: no encoded files is a
+        # valid (empty) output, not an error
+        return spark.createDataFrame([], ENCODED_DDL + ", run string")
+    # only the visible runs' dirs are read (``run`` from the dir name)
+    base = _encoded_path(output_dir)
+    enc = _read_run_partitioned(
+        spark, base, [f"{base}/run={r}" for r in sorted(vis.files)])
+    return enc.join(F.broadcast(keys), ["run", "partition_id", "chunk_id"],
+                    "left_semi")
 
 
 def _done_chunk_bitmap(man: DataFrame, n_chunks: int) -> np.ndarray:
@@ -2152,9 +2172,14 @@ def freeze(
     drops data outside it; replacing content whose plan changed (input
     rewritten in place) needs a full-table overwrite or delete/purge.
 
+    ``partition_by`` nests each run's encoded files in per-value dirs;
+    only ``["partition_id"]`` is accepted, since any other column would
+    split a chunk's rows across files.
+
     Returns a summary dict (cryo's FreezeSummary analog,
     /root/reference/crates/freeze/src/types/summaries.rs:21-31).
-    ``dry_run`` plans and reports without executing (cryo's --dry-run,
+    Its keys are the same on every path: dry run, no-op resume and
+    encode. ``dry_run`` plans and reports without executing (cryo's --dry-run,
     /root/reference/crates/freeze/src/freeze.rs:44-46). A JSON report
     is written per run — incomplete first, finalized after, like the
     reference's report lifecycle
@@ -2165,10 +2190,17 @@ def freeze(
     t_start = time.perf_counter()
     input_df = input_path if isinstance(input_path, DataFrame) else None
     input_desc = "<dataframe>" if input_df is not None else input_path
-    if branch is not None:
-        # fail fast on an unknown branch (branching requires an existing
-        # output with a snapshot log)
-        snapshots.resolve(output_dir, f"branch:{branch}")
+    bad = sorted(set(partition_by or ()) - {"partition_id"})
+    if bad:
+        # any other column splits a chunk's rows across files, breaking
+        # the whole-chunk-per-file contract every reader relies on (and
+        # a chunk_id= layout strips the chunk_id column from the files)
+        raise ValueError(
+            f"partition_by={bad}: only 'partition_id' keeps every chunk "
+            "inside one encoded file")
+    # resume and overwrite see the target head: main, or the branch
+    # (fails fast on an unknown branch or a non-local output)
+    vis = _visible(output_dir, None if branch is None else f"branch:{branch}")
     key_df = None
     if keys is not None:
         # Key-range freeze (the reference's block-range requests): the
@@ -2241,11 +2273,9 @@ def freeze(
         # visible; a ranged (--keys) overwrite retires only chunks of
         # the SAME plan (the same request re-frozen) so disjoint ranges
         # keep coexisting.
-        man_prev = read_manifest(
-            spark, output_dir,
-            as_of=None if branch is None else f"branch:{branch}")
+        man_prev = _read_manifest(spark, output_dir, vis)
         if man_prev is not None:
-            retire_keys = _visible_ok_keys(spark, output_dir, man_prev)
+            retire_keys = _visible_ok_keys(spark, vis, man_prev)
             if keys is not None:
                 if "plan_id" not in man_prev.columns:
                     retire_keys = None
@@ -2258,9 +2288,7 @@ def freeze(
                         same_plan, ["run", "partition_id", "chunk_id"],
                         "left_semi")
     else:
-        man = read_manifest(
-            spark, output_dir,
-            as_of=None if branch is None else f"branch:{branch}")
+        man = _read_manifest(spark, output_dir, vis)
         if man is not None:
             ok = man.filter(F.col("status") == "ok")
             if "plan_id" in man.columns:
@@ -2269,20 +2297,19 @@ def freeze(
             n_done = int(np.unpackbits(done_bits).sum())
     n_missing = plan.n_chunks - n_done
     n_skipped = n_done
-    if dry_run:
-        return dict(
-            dry_run=True, n_chunks=plan.n_chunks, n_planned=plan.n_chunks,
-            n_to_encode=n_missing, n_skipped=n_skipped,
-            n_salted_buckets=plan.n_salted_buckets,
-            target_tokens=target_tokens,
-            wall_s=time.perf_counter() - t_start,
-        )
-    if not n_missing:
-        return dict(
-            n_chunks=plan.n_chunks, n_encoded=0, n_skipped=n_skipped,
-            wall_s=time.perf_counter() - t_start, tokens=0, enc_bytes=0,
-            raw_bytes=0, tokens_per_sec=0.0, run=None,
-        )
+    # one summary schema on every path (dry run, no-op resume, encode)
+    summary = dict(
+        snapshot=None, run=None, dry_run=dry_run,
+        n_chunks=plan.n_chunks, n_planned=plan.n_chunks,
+        n_to_encode=n_missing, n_encoded=0, n_failed=0,
+        n_skipped=n_skipped, n_retired=0,
+        n_salted_buckets=plan.n_salted_buckets, target_tokens=target_tokens,
+        wall_s=0.0, encode_wall_s=0.0, tokens=0, enc_bytes=0, raw_bytes=0,
+        tokens_per_sec=0.0,
+    )
+    if dry_run or not n_missing:
+        summary["wall_s"] = time.perf_counter() - t_start
+        return summary
 
     run_id = _new_run_id()
     _write_report(output_dir, run_id, dict(
@@ -2363,12 +2390,11 @@ def freeze(
         **({} if branch is None else {"branch": branch}))
     tokens = int(stats["tokens"] or 0)
     n_failed = int(stats["n_failed"] or 0)
-    summary = dict(
+    summary.update(
         snapshot=snap,
-        n_chunks=plan.n_chunks,
+        run=run_id,
         n_encoded=n_missing - n_failed,
         n_failed=n_failed,
-        n_skipped=n_skipped,
         n_retired=n_retired,
         wall_s=time.perf_counter() - t_start,
         encode_wall_s=enc_wall,
@@ -2376,11 +2402,10 @@ def freeze(
         enc_bytes=int(stats["enc_bytes"] or 0),
         raw_bytes=int(stats["raw_bytes"] or 0),
         tokens_per_sec=tokens / enc_wall if enc_wall > 0 else 0.0,
-        run=run_id,
     )
     _write_report(output_dir, run_id, dict(
         version="cryo_spark 0.1.0", status="completed",
-        input_path=input_desc, target_tokens=target_tokens, **summary,
+        input_path=input_desc, **summary,
     ))
     return summary
 
@@ -2425,11 +2450,12 @@ def compact(
     min_tokens = target_tokens // 2 if min_tokens is None else min_tokens
     no_op = dict(n_compacted=0, n_new_chunks=0, n_retired=0, run=None,
                  wall_s=0.0)
-    man = read_manifest(spark, output_dir)
+    vis = _visible(output_dir)
+    man = _read_manifest(spark, output_dir, vis)
     if man is None:
         return no_op
     payload_col = spec.list_column or spec.key
-    live = _visible_ok_keys(spark, output_dir, man)
+    live = _visible_ok_keys(spark, vis, man)
     sizes = man.filter(
         (F.col("status") == "ok") & (F.col("column") == payload_col)
     ).select("run", "partition_id", "chunk_id", "n_values")
@@ -2447,13 +2473,10 @@ def compact(
         [(r["run"], r["partition_id"], r["chunk_id"]) for r in cand],
         "run string, partition_id int, chunk_id int",
     )
-    enc_subset = read_encoded(spark, output_dir).join(
-        F.broadcast(cand_keys), ["run", "partition_id", "chunk_id"],
-        "left_semi",
-    )
     # materialize once: planning and encoding would otherwise each re-run
     # the decode of every candidate chunk
-    rows = decode(enc_subset, spec=spec).localCheckpoint()
+    rows = decode(_chunk_subset(spark, output_dir, vis, cand_keys),
+                  spec=spec).localCheckpoint()
     plan = layout.plan_chunks(rows, target_tokens, spec=spec)
     if plan.n_chunks >= len(cand):
         # rewrite would not shrink the layout (e.g. singleton small
@@ -2494,51 +2517,33 @@ def vacuum(spark: SparkSession, output_dir: str) -> dict:
 
     ``compact`` retires chunks logically (tombstones); their payload
     bytes stay on disk until every chunk of a run is retired, at which
-    point the whole ``encoded/run=`` dir is provably dead and can go —
-    the Iceberg ``expire_snapshots`` / orphan-GC analog, scoped to what
-    is safe without a catalog: only runs WITH a committed manifest and
-    ZERO live chunks are deleted (idempotent, crash-safe — a re-run just
-    finds fewer dirs). Encoded dirs with no manifest at all are left
-    alone: they may belong to an in-flight freeze. Manifest and
-    tombstone history stay append-only; readers never consult dead runs'
-    files (the key anti-join already excludes them), so deletion is
-    invisible to every read path.
+    point the whole ``encoded/run=`` dir is dead and can go — the
+    Iceberg ``expire_snapshots`` / orphan-GC analog, scoped to what is
+    safe without a catalog. The candidates are the runs the current
+    snapshot shows (:func:`_visible`) with ZERO live chunks under its
+    tombstones; runs committed to any branch are kept. Runs the current
+    snapshot does not show are never touched: uncommitted dirs may
+    belong to an in-flight freeze, and a rolled-back run can be
+    restored by a later rollback. Idempotent and crash-safe (a re-run
+    finds fewer dirs). Manifest and tombstone history stay append-only;
+    the ``vacuum`` log entry records the removed runs, so a later read
+    that still needs them (``as_of`` before the compaction) fails
+    naming the vacuum instead of returning partial rows.
     """
-    import os
     import shutil
 
-    if "://" in output_dir:
-        raise ValueError(
-            "vacuum deletes local files; on a real catalog this maps to "
-            "expire_snapshots / remove_orphan_files"
-        )
-    # filesystem truth (raw): tombstone-retired runs are dead even while
-    # a rollback hides the compaction — BUT any run the current
-    # (rollback-aware) state can still reach must survive, or the
-    # rolled-back table would lose live bytes
-    man = read_manifest(spark, output_dir, raw=True)
+    vis = _visible(output_dir)
+    man = _read_manifest(spark, output_dir, vis)
     if man is None:
         return dict(snapshot=None, n_deleted_runs=0, bytes_reclaimed=0,
                     deleted_runs=[])
-    live_runs = {
-        r["run"]
-        for r in _visible_ok_keys(spark, output_dir, man)
-        .select("run").distinct().collect()
-    }
-    cur = snapshots.current(output_dir)
-    if cur is not None:
-        live_runs |= cur["runs"]
-    # runs committed to any branch stay reachable from that branch's
-    # head even though main's visibility excludes them
-    live_runs |= snapshots.branch_data_runs(output_dir)
-    all_runs = {r["run"] for r in man.select("run").distinct().collect()}
-    dead = sorted(all_runs - live_runs)
+    keep = {r["run"] for r in _visible_ok_keys(spark, vis, man)
+            .select("run").distinct().collect()}
+    keep |= snapshots.branch_data_runs(output_dir)
     reclaimed = 0
     deleted = []
-    for run_val in dead:
-        d = os.path.join(_encoded_path(output_dir), f"run={run_val}")
-        if not os.path.isdir(d):
-            continue
+    for run_val in sorted((vis.runs & vis.listed["encoded"]) - keep):
+        d = os.path.join(vis.root, "encoded", f"run={run_val}")
         for root, _dirs, files in os.walk(d):
             reclaimed += sum(
                 os.path.getsize(os.path.join(root, f)) for f in files)
@@ -2561,37 +2566,27 @@ def remove_orphans(spark: SparkSession, output_dir: str,
 
     A freeze/compact that dies before its manifest commit leaves an
     ``encoded/run=`` (or ``tombstones/run=``) dir that every reader
-    already ignores (the orphan-invisibility semi-join) but that
-    ``vacuum`` deliberately skips — it "may belong to an in-flight
+    already ignores (:func:`_visible` shows committed runs only) but
+    that ``vacuum`` deliberately skips — it "may belong to an in-flight
     freeze". This job is the complement, with Iceberg
     remove_orphan_files' exact safety rule: a dir is an orphan only if
-    its run appears in NEITHER the manifest (consolidated generations
-    included) NOR the snapshot log, AND its newest file is older than
-    ``min_age_s`` (default 1 day) — an in-flight writer's files are
-    always younger. Removal is invisible to every read path by
-    construction; an ``orphan_gc`` log entry records it for audit
-    (ignored by the visibility replay).
+    its run has NO manifest (no ``manifest/run=`` dir, not absorbed by a
+    consolidation) and is NOT named by the snapshot log, AND its newest
+    file is older than ``min_age_s`` (default 1 day) — an in-flight
+    writer's files are always younger. Removal is invisible to every
+    read path by construction; an ``orphan_gc`` log entry records it for
+    audit (ignored by the visibility replay).
     """
     import shutil
 
-    if "://" in output_dir:
-        raise ValueError(
-            "remove_orphans deletes local files; on a real catalog this "
-            "maps to remove_orphan_files")
-    man = read_manifest(spark, output_dir, raw=True)
-    known = set() if man is None else {
-        r["run"] for r in man.select("run").distinct().collect()}
+    vis = _visible(output_dir)
+    known = vis.listed["manifest"] | vis.committed
     known |= {e["run"] for e in snapshots.log(output_dir) if e.get("run")}
     now = time.time()
     removed, reclaimed = [], 0
-    for base in (_encoded_path(output_dir), _tombstones_path(output_dir),
-                 _deletes_path(output_dir)):
-        if not os.path.isdir(base):
-            continue
-        for d in sorted(os.listdir(base)):
-            if not d.startswith("run=") or d[4:] in known:
-                continue
-            path = os.path.join(base, d)
+    for name in ("encoded", "tombstones", "deletes"):
+        for run_val in sorted(vis.listed[name] - known):
+            path = os.path.join(vis.root, name, f"run={run_val}")
             newest, size = 0.0, 0
             for root, _dirs, files in os.walk(path):
                 for f in files:
@@ -2603,7 +2598,7 @@ def remove_orphans(spark: SparkSession, output_dir: str,
             if now - newest < min_age_s:
                 continue  # possibly in-flight: too young to judge
             shutil.rmtree(path)
-            removed.append(f"{os.path.basename(base)}/{d}")
+            removed.append(f"{name}/run={run_val}")
             reclaimed += size
     snap = None
     if removed:
@@ -3276,9 +3271,7 @@ def collect(
                                as_of=as_of)
         else:
             enc = read_encoded(spark, source, as_of=as_of)
-            vis = (snapshots.resolve(source, as_of) if as_of is not None
-                   else snapshots.current(source))
-            need_del = vis is not None and bool(vis["deletes"])
+            deletes = _visible(source, as_of).deletes
             if keys is not None:
                 man = read_manifest(spark, source, as_of=as_of)
                 key_chunks = _parse_keys(
@@ -3308,7 +3301,7 @@ def collect(
             extra = [] if key_chunks is None or spec.key in used else [spec.key]
             extra += [n for n, _, _ in (filters or ())
                       if n not in used and n not in extra]
-            if need_del and spec.key not in used and spec.key not in extra:
+            if deletes and spec.key not in used and spec.key not in extra:
                 extra.append(spec.key)
             df = decode(enc, columns=[*extra, *used] if extra else used,
                         spec=spec)
@@ -3317,8 +3310,8 @@ def collect(
                     ranges.key_predicate(key_chunks, _key_expr(spec)))
             if residual is not None:
                 df = df.filter(residual)
-            if need_del:
-                df = _apply_deletes(spark, df, source, vis, spec)
+            if deletes:
+                df = _apply_deletes(spark, df, source, deletes, spec)
             if key_chunks is not None or extra:
                 df = df.select(*used)
     else:

@@ -808,6 +808,11 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
     from . import engine
 
     loc = table_location or os.path.join(out_dir, "iceberg")
+    # the engine's one visibility answer: which runs and files the
+    # current snapshot shows; a visible run whose live chunks have no
+    # files (dir gone or emptied) is an error naming the run
+    vis = engine._visible(out_dir)
+    engine._require_readable(vis, out_dir)
     # Visible run set + visible encoded-row count from the MANIFEST
     # (bounded: rows ∝ chunks), not from scanning the encoded payload
     # files — at 10^5-10^6 data files the two payload jobs the old path
@@ -815,10 +820,10 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
     # more than the distributed footer pass itself. Manifest rows mirror
     # encoded rows 1:1 (same keys, minus payload), so the visible ok-row
     # count IS the visible encoded-row count.
-    man = engine.read_manifest(spark, out_dir)
+    man = engine._read_manifest(spark, out_dir, vis)
     if man is None:
         raise ValueError(f"{out_dir}: nothing committed to export")
-    vis_keys = engine._visible_ok_keys(spark, out_dir, man)
+    vis_keys = engine._visible_ok_keys(spark, vis, man)
     per_run = (man.filter(F.col("status") == "ok")
                .join(F.broadcast(vis_keys),
                      ["run", "partition_id", "chunk_id"], "left_semi")
@@ -886,12 +891,7 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
                              partition_fields=part_fields,
                              properties=props)
 
-    paths = []
-    for run in runs:
-        run_dir = os.path.join(out_dir, "encoded", f"run={run}")
-        for name in sorted(os.listdir(run_dir)):
-            if name.endswith(".parquet") and not name.startswith("."):
-                paths.append(os.path.join(run_dir, name))
+    paths = [p for run in runs for p in vis.files[run]]
     # The data files ARE the table: take the registered schema from one
     # file footer (driver-side, no job) rather than a read_encoded plan
     # over every file. Every encoded file carries the fixed ENCODED_DDL

@@ -37,8 +37,16 @@ DIRNAME = "snapshots"
 _DATA_KINDS = ("append", "rewrite")
 
 
+def local_path(output_dir: str) -> str | None:
+    """Filesystem path of a local or ``file://`` output; None for any
+    other scheme (an object store, where the catalog owns the log)."""
+    if output_dir.startswith("file://"):
+        return output_dir[len("file://"):]
+    return None if "://" in output_dir else output_dir
+
+
 def _dir(output_dir: str) -> str:
-    return os.path.join(output_dir, DIRNAME)
+    return os.path.join(local_path(output_dir), DIRNAME)
 
 
 def commit(output_dir: str, run: str | None, kind: str, **extra) -> int | None:
@@ -47,7 +55,7 @@ def commit(output_dir: str, run: str | None, kind: str, **extra) -> int | None:
     No-op (returns None) on non-local stores, where the atomic append is
     the catalog's job, not the filesystem's.
     """
-    if "://" in output_dir:
+    if local_path(output_dir) is None:
         return None
     d = _dir(output_dir)
     os.makedirs(d, exist_ok=True)
@@ -90,6 +98,8 @@ def log(output_dir: str) -> list[dict]:
     files-not-yet-deleted crash window) dedup by seq. Without a
     checkpoint this is the original one-file-per-commit read.
     """
+    if local_path(output_dir) is None:
+        return []
     d = _dir(output_dir)
     if not os.path.isdir(d):
         return []
@@ -236,15 +246,15 @@ def resolve(output_dir: str, as_of: int | str) -> dict:
     else:
         as_of = resolve_ref(output_dir, as_of)  # int passes through;
         # tag / 'ts:<time>' / datetime resolve to a seq
-    removed = {
-        r
-        for e in entries
-        if e["kind"] == "vacuum"
-        for r in e.get("removed_runs", [])
-    }
     runs, dels = _state_at(entries, as_of, branch)
-    return dict(runs=runs, deletes=dels, removed=removed,
+    return dict(runs=runs, deletes=dels, removed=vacuumed(entries),
                 max_seq=entries[-1]["seq"])
+
+
+def vacuumed(entries: list[dict]) -> set[str]:
+    """Every run whose payload a vacuum entry records as deleted."""
+    return {r for e in entries if e["kind"] == "vacuum"
+            for r in e.get("removed_runs", [])}
 
 
 def current(output_dir: str) -> dict | None:
@@ -276,8 +286,6 @@ def latest_consolidation(output_dir: str) -> dict | None:
     Consolidation is metadata-only — ``_state_at`` ignores the kind, so
     visibility, time travel, branches and rollback are all unaffected.
     """
-    if "://" in output_dir:
-        return None
     for e in reversed(log(output_dir)):
         if e["kind"] == "consolidate":
             return dict(seq=e["seq"], gen=e["gen"],

@@ -1,22 +1,25 @@
 """Shuffle-free decode (engine.decode_frozen) vs the relational path.
 
-The fast path must be a pure optimization: identical rows to
-decode(read_encoded(...)) under every commit/orphan/failure state, with
-conservative fallback whenever run-granular commit markers cannot prove
-the manifest is complete.
+decode_frozen is the one read path for frozen outputs: identical rows to
+decode(read_encoded(...)) under every commit/orphan/failure/snapshot
+state, with no payload FileScan and no Spark job to plan it — its
+visibility comes from the driver-side resolver (engine._visible).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-from cryo_spark import engine
+from cryo_spark import engine, snapshots
 
 TARGET = 200_000
+SMALL = 20_000   # many small chunks from the 10k fixture
+BIG = 400_000    # compact target
 
 
 @pytest.fixture(scope="module")
@@ -40,23 +43,89 @@ def _assert_same(spark, df_fast, df_ref, key="doc_id"):
     assert j.filter(pred).count() == 0
 
 
-def test_matches_relational(spark, frozen_dir):
-    fast = engine.decode_frozen(spark, frozen_dir)
-    ref = engine.decode(engine.read_encoded(spark, frozen_dir))
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _two_ranges(spark, sequences_path, out):
+    for keys in ("0:5000", "5000:10000"):
+        engine.freeze(spark, sequences_path, out, target_tokens=TARGET,
+                      keys=keys)
+
+
+STATES = ["compacted", "rolled_back", "consolidated", "as_of",
+          "partition_by"]
+
+
+@pytest.fixture(scope="module", params=STATES)
+def state(request, spark, sequences_path, tmp_path_factory):
+    """(output dir, as_of) in each state whose visibility is more than
+    one plain run: tombstones (a partial compaction leaves retired and
+    live chunks in the same files), a rollback past a compaction, a
+    consolidated manifest, time travel, and the nested partition_by
+    layout."""
+    name = request.param
+    out = str(tmp_path_factory.mktemp(name) / "out")
+    as_of = None
+    if name == "compacted":
+        engine.freeze(spark, sequences_path, out, target_tokens=SMALL)
+        c = engine.compact(spark, out, target_tokens=BIG, max_chunks=6)
+        assert c["n_retired"] == 6
+    elif name == "rolled_back":
+        s = engine.freeze(spark, sequences_path, out, target_tokens=SMALL)
+        assert engine.compact(spark, out, target_tokens=BIG)["run"]
+        snapshots.rollback(out, s["snapshot"])
+    elif name == "consolidated":
+        _two_ranges(spark, sequences_path, out)
+        assert engine.consolidate_manifests(spark, out)["consolidated"]
+    elif name == "as_of":
+        _two_ranges(spark, sequences_path, out)
+        as_of = 1
+    else:
+        engine.freeze(spark, sequences_path, out, target_tokens=TARGET,
+                      partition_by=["partition_id"])
+    return out, as_of
+
+
+def _check_matches(spark, out, as_of):
+    fast = engine.decode_frozen(spark, out, as_of=as_of)
+    ref = engine.decode(engine.read_encoded(spark, out, as_of=as_of))
+    assert fast.count() > 0
     _assert_same(spark, fast, ref)
 
 
-def test_no_payload_exchange_in_plan(spark, frozen_dir):
+def _check_no_payload_scan(spark, out, as_of):
     """The only exchange in the fast plan is the tiny task-list
-    round-robin; the relational plan repartitions the payload rows."""
-    fast_plan = engine.decode_frozen(spark, frozen_dir)._jdf.queryExecution() \
-        .executedPlan().toString()
-    # the payload-bearing relational plan scans parquet then exchanges;
+    round-robin, and building it runs no Spark job; the relational plan
+    scans and repartitions the payload rows."""
+    sc = spark.sparkContext
+    group = f"decode_frozen_plan_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan only")
+    try:
+        fast = engine.decode_frozen(spark, out, as_of=as_of)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     # the fast plan's scan is a local task-list relation
-    assert "FileScan parquet" not in fast_plan
-    rel_plan = engine.decode(engine.read_encoded(spark, frozen_dir)) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan parquet" in rel_plan
+    assert "FileScan parquet" not in _plan(fast)
+    rel = engine.decode(engine.read_encoded(spark, out, as_of=as_of))
+    assert "FileScan parquet" in _plan(rel)
+
+
+def test_matches_relational(spark, frozen_dir):
+    _check_matches(spark, frozen_dir, None)
+
+
+def test_no_payload_exchange_in_plan(spark, frozen_dir):
+    _check_no_payload_scan(spark, frozen_dir, None)
+
+
+def test_matches_relational_in_state(spark, state):
+    _check_matches(spark, *state)
+
+
+def test_no_payload_exchange_in_state(spark, state):
+    _check_no_payload_scan(spark, *state)
 
 
 def test_orphan_run_invisible(spark, frozen_dir, tmp_path):
@@ -71,19 +140,37 @@ def test_orphan_run_invisible(spark, frozen_dir, tmp_path):
     assert n_fast == n_ref
 
 
-def test_partial_manifest_falls_back(spark, frozen_dir, tmp_path):
-    """A manifest run dir without its commit marker forces the
-    relational semi-join path; rows still match it exactly."""
-    work = str(tmp_path / "partial")
-    shutil.copytree(frozen_dir, work)
-    man_base = f"{work}/manifest"
-    run = next(d for d in os.listdir(man_base) if d.startswith("run="))
-    marker = f"{man_base}/{run}/_SUCCESS"
-    assert os.path.exists(marker)
-    os.remove(marker)
-    fast = engine.decode_frozen(spark, work)
-    ref = engine.decode(engine.read_encoded(spark, work))
-    _assert_same(spark, fast, ref)
+def test_unmarked_run_is_invisible(spark, sequences_path, tmp_path):
+    """A manifest run dir without its _SUCCESS marker (a writer that
+    died mid-commit) is uncommitted on every path: decode_frozen,
+    read_encoded and read_manifest all skip it, and a re-freeze
+    re-encodes its chunks."""
+    out = str(tmp_path / "partial")
+    _two_ranges(spark, sequences_path, out)
+    runs = [e["run"] for e in snapshots.log(out)]
+    os.remove(f"{out}/manifest/run={runs[1]}/_SUCCESS")
+    first = spark.read.parquet(sequences_path).filter(
+        F.col("doc_id") < "doc-000000005000")
+    assert engine.decode_frozen(spark, out).count() == first.count()
+    _assert_same(spark, engine.decode_frozen(spark, out),
+                 engine.decode(engine.read_encoded(spark, out)))
+    man_runs = {r.run for r in engine.read_manifest(spark, out)
+                .select("run").distinct().collect()}
+    assert man_runs == {runs[0]}
+    s = engine.freeze(spark, sequences_path, out, target_tokens=TARGET,
+                      keys="5000:10000")
+    assert s["n_skipped"] == 0 and s["n_encoded"] == s["n_chunks"] > 0
+    dec = engine.decode_frozen(spark, out)
+    assert dec.count() == dec.select("doc_id").distinct().count() == 10_000
+
+
+def test_freeze_rejects_chunk_splitting_partition_by(spark, sequences_path,
+                                                     tmp_path):
+    out = str(tmp_path / "pby")
+    with pytest.raises(ValueError, match="partition_by"):
+        engine.freeze(spark, sequences_path, out, target_tokens=TARGET,
+                      partition_by=["column"])
+    assert not os.path.exists(out)
 
 
 def test_column_pruned(spark, frozen_dir):

@@ -330,19 +330,7 @@ def test_failed_chunk_isolated_and_retried(spark, tmp_path):
     exactly the failed chunk (the reference's completed/errored/skipped
     accounting, /root/reference/crates/freeze/src/types/summaries.rs:21-31).
     """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rows = [(f"d{i:04d}", list(range(5)), 5, "s0") for i in range(100)]
-    rows.append((engine._FAULT_SENTINEL, [1, 2], 2, "s0"))
-    t = pa.table({
-        "doc_id": pa.array([r[0] for r in rows]),
-        "tokens": pa.array([r[1] for r in rows], type=pa.list_(pa.int32())),
-        "n_tok": pa.array([r[2] for r in rows], type=pa.int32()),
-        "source": pa.array([r[3] for r in rows]),
-    })
-    inp = str(tmp_path / "fault.parquet")
-    pq.write_table(t, inp)
+    inp, rows = _fault_input(tmp_path)
     out = str(tmp_path / "fault_out")
     s = engine.freeze(spark, inp, out, target_tokens=50)
     assert s["n_failed"] == 1
@@ -360,6 +348,48 @@ def test_failed_chunk_isolated_and_retried(spark, tmp_path):
     s2 = engine.freeze(spark, inp, out, target_tokens=50)
     assert s2["n_skipped"] == s["n_chunks"] - 1
     assert s2["n_failed"] == 1 and s2["n_encoded"] == 0
+
+
+def _fault_input(tmp_path, fault: bool = True):
+    """100 small docs, plus the fault-injection sentinel doc when
+    ``fault``: its chunk fails to encode (engine._encode_chunk)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [(f"d{i:04d}", list(range(5)), 5, "s0") for i in range(100)]
+    if fault:
+        rows.append((engine._FAULT_SENTINEL, [1, 2], 2, "s0"))
+    t = pa.table({
+        "doc_id": pa.array([r[0] for r in rows]),
+        "tokens": pa.array([r[1] for r in rows], type=pa.list_(pa.int32())),
+        "n_tok": pa.array([r[2] for r in rows], type=pa.int32()),
+        "source": pa.array([r[3] for r in rows]),
+    })
+    inp = str(tmp_path / ("fault.parquet" if fault else "clean.parquet"))
+    pq.write_table(t, inp)
+    return inp, rows
+
+
+def test_freeze_summary_keys_on_every_path(spark, tmp_path):
+    """One summary schema: dry run, no-op resume, a clean encode and an
+    encode with a failed chunk all return the same keys."""
+    clean, _ = _fault_input(tmp_path, fault=False)
+    faulty, _ = _fault_input(tmp_path)
+    out = str(tmp_path / "keys_out")
+    dry = engine.freeze(spark, clean, out, target_tokens=50, dry_run=True)
+    normal = engine.freeze(spark, clean, out, target_tokens=50)
+    noop = engine.freeze(spark, clean, out, target_tokens=50)
+    failed = engine.freeze(spark, faulty, str(tmp_path / "keys_fault"),
+                           target_tokens=50)
+    assert dry["dry_run"] and dry["n_to_encode"] == dry["n_chunks"] > 0
+    assert normal["n_encoded"] == normal["n_chunks"] and normal["run"]
+    assert noop["n_encoded"] == 0 and noop["run"] is None
+    assert failed["n_failed"] == 1
+    keys = set(normal)
+    assert {"snapshot", "run", "n_failed", "n_retired",
+            "encode_wall_s"} <= keys
+    for s in (dry, noop, failed):
+        assert set(s) == keys
 
 
 def test_null_token_elements_rejected(spark, tmp_path):

@@ -487,3 +487,26 @@ def test_collect_file_infos_matches_driver_loop(spark, tmp_path):
         assert f["record_count"] == pq.ParquetFile(f["path"]).metadata.num_rows
         assert f["file_size"] == os.path.getsize(f["path"])
         assert f["stats"] == iceberg.file_column_stats(f["path"], schema_json)
+
+
+@pytest.mark.parametrize("damage", ["dir_absent", "dir_empty"])
+def test_export_frozen_names_unreadable_run(spark, tmp_path, damage):
+    """A visible run whose encoded dir is gone, or holds no parquet
+    file, fails the export with a ValueError naming the run."""
+    import shutil
+
+    import cryo_spark
+
+    src = str(tmp_path / "in.parquet")
+    cryo_spark.write_sequences(src, n=500, seed=13)
+    out = str(tmp_path / "out")
+    s = cryo_spark.freeze(spark, src, out, target_tokens=30_000)
+    run_dir = f"{out}/encoded/run={s['run']}"
+    if damage == "dir_absent":
+        shutil.rmtree(run_dir)
+    else:
+        for name in os.listdir(run_dir):
+            if name.endswith(".parquet"):
+                os.remove(os.path.join(run_dir, name))
+    with pytest.raises(ValueError, match=s["run"]):
+        iceberg.export_frozen(spark, out, now_ms=1)

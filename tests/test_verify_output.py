@@ -133,3 +133,25 @@ def test_crashed_rewrite_is_invisible_and_flagged(spark, frozen):
                   .select("doc_id").collect()) == before
     r = verify_output(spark, out)
     assert r["status"] == "warn" and r["n_orphan_rows"] > 0
+
+
+def test_rolled_back_compaction_cannot_mask_lost_payload(spark,
+                                                         sequences_path,
+                                                         tmp_path):
+    """After a rollback past a compaction, the compaction's tombstones
+    no longer count: the freeze run's chunks are live again, so a lost
+    encoded file of that run is missing payload, named by run."""
+    from cryo_spark import snapshots
+
+    out = str(tmp_path / "out")
+    s = freeze(spark, sequences_path, out, target_tokens=20_000)
+    c = compact(spark, out, target_tokens=400_000)
+    assert c["run"] is not None and c["n_compacted"] > 1
+    snapshots.rollback(out, s["snapshot"])
+    files = sorted(glob.glob(f"{out}/encoded/run={s['run']}/*.parquet"))
+    assert len(files) > 1
+    os.remove(files[0])
+    r = verify_output(spark, out)
+    assert r["status"] == "corrupt", r
+    assert r["n_missing_payload"] > 0, r
+    assert r["missing_payload_runs"] == [s["run"]], r
