@@ -64,14 +64,10 @@ def _clean_files(output_dir: str) -> list[str] | None:
     - flat encoded layout (no ``partition_by`` nested dirs).
     """
     vis = engine._visible(output_dir)
-    if (vis.snapshot or vis.drop or vis.missing
-            or vis.listed["manifest"] - vis.committed):
+    if (vis.snapshot or vis.drop or vis.missing or vis.uncommitted
+            or vis.nested):
         return None
-    files = [f for r in sorted(vis.files) for f in vis.files[r]]
-    if any(os.path.basename(os.path.dirname(os.path.dirname(f)))
-           != "encoded" for f in files):
-        return None  # partition_by nested layout
-    return files
+    return [f for r in sorted(vis.files) for f in vis.files[r]]
 
 
 def _single_plan_id(spark: SparkSession, output_dir: str) -> str | None:

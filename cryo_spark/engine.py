@@ -888,7 +888,7 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
     man_base = os.path.join(vis.root, "manifest")
     gens_base = os.path.join(vis.root, "manifest_gens")
     # leftovers of a consolidation that died between commit and delete
-    stale = vis.listed["manifest"] & prev_absorbed
+    stale = vis.stale
     absorb = (vis.committed - prev_absorbed) & logged_runs
     for d in stale:
         shutil.rmtree(os.path.join(man_base, f"run={d}"), ignore_errors=True)
@@ -968,11 +968,14 @@ class _Visible(NamedTuple):
     missing: dict        # visible run with live chunks but no files ->
                          # likely cause
     committed: frozenset  # every committed data run, at any snapshot
+    uncommitted: frozenset  # manifest run dirs with no commit (mid-commit)
+    stale: frozenset     # manifest run dirs a consolidation absorbed
+    nested: frozenset    # visible runs laid out in partition_by dirs
+    unclaimed: dict      # "encoded"/"tombstones"/"deletes" -> run dirs
+                         # with no manifest dir and no commit
     snapshot: bool       # the log overrides disk truth (as_of, rollback,
                          # delete or branch state)
     cons: dict | None    # latest manifest consolidation entry
-    listed: dict         # "manifest"/"encoded"/"tombstones"/"deletes" ->
-                         # run ids with a dir on disk
     root: str            # the output's local path (file:// mapped)
 
 
@@ -1049,7 +1052,8 @@ def _visible(output_dir: str, as_of: int | str | None = None) -> _Visible:
       likely cause and :func:`_require_readable` raises on it.
 
     Inputs are the snapshot log, the run-dir listings and pyarrow reads
-    of the counted tombstone files. Outputs are local paths or
+    of the counted tombstone files; callers get facts derived from the
+    listings, never the listings. Outputs are local paths or
     ``file://`` URLs; any other scheme raises here, once.
     """
     import pyarrow.parquet as pq
@@ -1067,10 +1071,10 @@ def _visible(output_dir: str, as_of: int | str | None = None) -> _Visible:
               for name in ("manifest", "encoded", "tombstones", "deletes")}
     man_base = os.path.join(root, "manifest")
     root_ok = os.path.exists(os.path.join(man_base, "_SUCCESS"))
+    absorbed = cons["absorbed"] if cons is not None else set()
     committed = frozenset(
         {r for r in listed["manifest"] if root_ok or os.path.exists(
-            os.path.join(man_base, f"run={r}", "_SUCCESS"))}
-        | (cons["absorbed"] if cons is not None else set()))
+            os.path.join(man_base, f"run={r}", "_SUCCESS"))} | absorbed)
     runs = committed if snap is None else committed & snap["runs"]
     removed = frozenset(snap["removed"] if snap is not None
                         else snapshots.vacuumed(snapshots.log(output_dir)))
@@ -1082,11 +1086,14 @@ def _visible(output_dir: str, as_of: int | str | None = None) -> _Visible:
         cid = t.column("chunk_id").to_numpy(zero_copy_only=False)
         for r in set(target):
             drop[r] = _set_bits(drop.get(r), cid[target == r])
-    files = {}
+    files, nested = {}, set()
     for r in sorted(runs & listed["encoded"]):
-        fl = _parquet_files(os.path.join(root, "encoded", f"run={r}"))
+        d = os.path.join(root, "encoded", f"run={r}")
+        fl = _parquet_files(d)
         if fl:
             files[r] = fl
+        if any(os.path.dirname(f) != d for f in fl):
+            nested.add(r)
     missing = {}
     for r, cid in _ok_chunk_ids(output_dir, root, runs - files.keys(),
                                 cons).items():
@@ -1097,7 +1104,12 @@ def _visible(output_dir: str, as_of: int | str | None = None) -> _Visible:
         runs=runs, files=files, drop=drop,
         deletes=frozenset(snap["deletes"] if snap is not None else ()),
         removed=removed, missing=missing, committed=committed,
-        snapshot=snap is not None, cons=cons, listed=listed, root=root)
+        uncommitted=frozenset(listed["manifest"] - committed),
+        stale=frozenset(listed["manifest"] & absorbed),
+        nested=frozenset(nested), unclaimed={
+            k: listed[k] - listed["manifest"] - committed
+            for k in ("encoded", "tombstones", "deletes")},
+        snapshot=snap is not None, cons=cons, root=root)
 
 
 def _ok_chunk_ids(output_dir: str, root: str, runs: set[str],
@@ -1365,14 +1377,17 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     """Structural audit of a frozen output (fsck / Iceberg verify analog).
 
     Cross-checks the metadata surfaces against each other and the
-    encoded files — all metadata-column reads, no payload decode. Live
-    chunks are the ones the current snapshot shows (:func:`_visible`):
-    committed, visible runs minus the chunks its tombstones retire, so a
-    rolled-back compaction's tombstones cannot mask missing payload.
+    encoded files — all metadata-column reads, no payload decode. The
+    chunks checked for payload are the ones a read can still reach
+    (:func:`_reachable_keys`): live under the current snapshot or at a
+    branch head, or in a committed run the current snapshot hides — so
+    a rolled-back compaction's tombstones cannot mask missing payload,
+    and a branch-only or rolled-back run's lost file is caught before a
+    publish or rollback exposes it.
 
-    - every live ok manifest row has its encoded row (missing payload =
-      corruption, ``n_missing_payload``; ``missing_payload_runs`` names
-      the runs);
+    - every reachable ok manifest row has its encoded row (missing
+      payload = corruption, ``n_missing_payload``;
+      ``missing_payload_runs`` names the runs);
     - a visible run with live chunks but no encoded files is named in
       ``unreadable_runs`` with its likely cause (vacuumed, or lost);
       those without a vacuum record also land in
@@ -1392,7 +1407,7 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     """
     report: dict = {}
     vis = _visible(output_dir)
-    man = _read_manifest(spark, output_dir, vis, raw=True)
+    man = read_manifest(spark, output_dir, vis, raw=True)
     if man is None:
         report.update(status="ok", empty=True)
         return report
@@ -1404,10 +1419,10 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
             spark, _encoded_path(output_dir)).select(*keys4)
     except Exception:
         enc = ok.limit(0)
-    # only LIVE chunks must have payload: a chunk a visible tombstone
-    # retires keeps its (append-only) manifest row while vacuum
-    # legitimately reclaims its bytes
-    live = _visible_ok_keys(spark, vis, _restrict(man, vis))
+    # only REACHABLE chunks must have payload: a chunk every ref's
+    # tombstones retire keeps its (append-only) manifest row while
+    # vacuum legitimately reclaims its bytes
+    live = _reachable_keys(spark, output_dir, vis, man)
     lost = (ok.join(F.broadcast(live), keys3, "left_semi")
             .join(enc, keys4, "left_anti")
             .groupBy("run").count().collect())
@@ -1443,7 +1458,8 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     report["missing_delete_runs"] = sorted(
         e["run"] for e in entries
         if e["kind"] == "delete" and e["run"]
-        and e["run"] not in vis.listed["deletes"]
+        and not os.path.isdir(
+            os.path.join(vis.root, "deletes", f"run={e['run']}"))
     )
     report["unreadable_runs"] = dict(sorted(vis.missing.items()))
     report["unaccounted_missing_dirs"] = sorted(
@@ -1677,7 +1693,7 @@ def upsert(
     if _visible(output_dir).deletes:
         purge_deletes(spark, output_dir, target_tokens, spec)
     vis = _visible(output_dir)
-    man = _read_manifest(spark, output_dir, vis)
+    man = read_manifest(spark, output_dir, vis)
     if man is None:
         # empty table: the merge degenerates to a plain freeze append
         summary = freeze(spark, input_path, output_dir,
@@ -1802,7 +1818,7 @@ def purge_deletes(
     vis = _visible(output_dir)
     if not vis.deletes:
         return no_op
-    man = _read_manifest(spark, output_dir, vis)  # current-visible rows
+    man = read_manifest(spark, output_dir, vis)  # current-visible rows
     if man is None:
         return no_op
     purged = sorted(vis.deletes)
@@ -1942,7 +1958,7 @@ def _read_tombstones(spark: SparkSession, output_dir: str) -> DataFrame | None:
 
 
 def read_manifest(spark: SparkSession, output_dir: str,
-                  as_of: int | str | None = None,
+                  as_of: int | str | _Visible | None = None,
                   raw: bool = False) -> DataFrame | None:
     """Manifest rows of the runs a snapshot shows (None: no manifest).
 
@@ -1952,16 +1968,15 @@ def read_manifest(spark: SparkSession, output_dir: str,
     committed run. A manifest run dir without its ``_SUCCESS`` marker is
     uncommitted, so its rows drop out here and resume re-encodes its
     chunks. ``raw=True`` returns every row on disk (filesystem truth —
-    the audit view).
+    the audit view). ``as_of`` may also be a view :func:`_visible`
+    already resolved, so an operation resolves its snapshot once.
     """
-    return _read_manifest(spark, output_dir,
-                          _visible(output_dir, None if raw else as_of), raw)
-
-
-def _read_manifest(spark: SparkSession, output_dir: str, vis: _Visible,
-                   raw: bool = False) -> DataFrame | None:
+    vis = (as_of if isinstance(as_of, _Visible)
+           else _visible(output_dir, None if raw else as_of))
     cons = vis.cons
-    if cons is None and not vis.listed["manifest"]:
+    absorbed = cons["absorbed"] if cons is not None else set()
+    any_dir = vis.committed - absorbed or vis.uncommitted or vis.stale
+    if cons is None and not any_dir:
         return None
     legs = []
     if cons is not None:
@@ -1974,18 +1989,17 @@ def _read_manifest(spark: SparkSession, output_dir: str, vis: _Visible,
                 f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}"))
         except Exception as e:
             raise _gen_unreadable(output_dir, cons) from e
-    if vis.listed["manifest"]:
+    if any_dir:
         try:
             dir_leg = _read_run_partitioned(spark, _manifest_path(output_dir))
         except Exception:
             dir_leg = None
-        if dir_leg is not None and cons is not None and cons["absorbed"]:
+        if dir_leg is not None and vis.stale:
             # absorbed dirs are deleted right after the consolidate
             # commit; this filter is the crash-window safety net (commit
             # landed, delete didn't) that keeps their rows from counting
             # twice
-            dir_leg = dir_leg.filter(
-                ~F.col("run").isin(sorted(cons["absorbed"])))
+            dir_leg = dir_leg.filter(~F.col("run").isin(sorted(vis.stale)))
         if dir_leg is not None:
             legs.append(dir_leg)
     if not legs:
@@ -1999,9 +2013,7 @@ def _read_manifest(spark: SparkSession, output_dir: str, vis: _Visible,
 def _restrict(man: DataFrame, vis: _Visible) -> DataFrame:
     """Manifest rows of the visible runs only (no-op when every run on
     disk is visible — the common case keeps its plan unchanged)."""
-    on_disk = vis.listed["manifest"] | (
-        vis.cons["absorbed"] if vis.cons is not None else set())
-    if vis.runs == on_disk:
+    if vis.runs == vis.committed and not vis.uncommitted:
         return man
     return man.filter(F.col("run").isin(sorted(vis.runs)))
 
@@ -2022,7 +2034,7 @@ def read_encoded(spark: SparkSession, output_dir: str,
     visible run's live chunks have no encoded files.
     """
     vis = _visible(output_dir, as_of)
-    man = _read_manifest(spark, output_dir, vis)
+    man = read_manifest(spark, output_dir, vis)
     keys = None if man is None else _visible_ok_keys(spark, vis, man)
     return _chunk_subset(spark, output_dir, vis, keys)
 
@@ -2049,6 +2061,29 @@ def _visible_ok_keys(spark: SparkSession, vis: _Visible,
     }))
     return keys.join(F.broadcast(retired), ["run", "chunk_id"],
                      "left_anti").select("run", "partition_id", "chunk_id")
+
+
+def _reachable_keys(spark: SparkSession, output_dir: str, vis: _Visible,
+                    man: DataFrame) -> DataFrame:
+    """Keys of every chunk a read can still reach — what vacuum keeps and
+    verify checks for payload: live under the current snapshot ``vis``,
+    live at any branch head, or any ok chunk of a committed run the
+    current snapshot hides (a later rollback or publish can show it).
+    Runs a vacuum recorded as removed drop out. ``man``: raw rows."""
+    keys = _visible_ok_keys(spark, vis, _restrict(man, vis))
+    heads = {e["branch"] for e in snapshots.log(output_dir)
+             if e["kind"] == "branch"}
+    for b in sorted(heads):
+        vb = _visible(output_dir, f"branch:{b}")
+        keys = keys.union(_visible_ok_keys(spark, vb, _restrict(man, vb)))
+    hidden = sorted(vis.committed - vis.runs)
+    if hidden:
+        keys = keys.union(man.filter(
+            (F.col("status") == "ok") & F.col("run").isin(hidden))
+            .select("run", "partition_id", "chunk_id"))
+    if vis.removed:
+        keys = keys.filter(~F.col("run").isin(sorted(vis.removed)))
+    return keys
 
 
 def _chunk_subset(spark: SparkSession, output_dir: str, vis: _Visible,
@@ -2273,7 +2308,7 @@ def freeze(
         # visible; a ranged (--keys) overwrite retires only chunks of
         # the SAME plan (the same request re-frozen) so disjoint ranges
         # keep coexisting.
-        man_prev = _read_manifest(spark, output_dir, vis)
+        man_prev = read_manifest(spark, output_dir, vis)
         if man_prev is not None:
             retire_keys = _visible_ok_keys(spark, vis, man_prev)
             if keys is not None:
@@ -2288,7 +2323,7 @@ def freeze(
                         same_plan, ["run", "partition_id", "chunk_id"],
                         "left_semi")
     else:
-        man = _read_manifest(spark, output_dir, vis)
+        man = read_manifest(spark, output_dir, vis)
         if man is not None:
             ok = man.filter(F.col("status") == "ok")
             if "plan_id" in man.columns:
@@ -2451,7 +2486,7 @@ def compact(
     no_op = dict(n_compacted=0, n_new_chunks=0, n_retired=0, run=None,
                  wall_s=0.0)
     vis = _visible(output_dir)
-    man = _read_manifest(spark, output_dir, vis)
+    man = read_manifest(spark, output_dir, vis)
     if man is None:
         return no_op
     payload_col = spec.list_column or spec.key
@@ -2521,29 +2556,32 @@ def vacuum(spark: SparkSession, output_dir: str) -> dict:
     Iceberg ``expire_snapshots`` / orphan-GC analog, scoped to what is
     safe without a catalog. The candidates are the runs the current
     snapshot shows (:func:`_visible`) with ZERO live chunks under its
-    tombstones; runs committed to any branch are kept. Runs the current
-    snapshot does not show are never touched: uncommitted dirs may
-    belong to an in-flight freeze, and a rolled-back run can be
-    restored by a later rollback. Idempotent and crash-safe (a re-run
-    finds fewer dirs). Manifest and tombstone history stay append-only;
-    the ``vacuum`` log entry records the removed runs, so a later read
-    that still needs them (``as_of`` before the compaction) fails
-    naming the vacuum instead of returning partial rows.
+    tombstones and none at any branch head (:func:`_reachable_keys` — a
+    branch reads main as it stood at the branch anchor). Runs the
+    current snapshot does not show are never touched: uncommitted dirs
+    may belong to an in-flight freeze, and a rolled-back or branch-only
+    run can be restored by a later rollback or publish. Idempotent and
+    crash-safe (a re-run finds fewer dirs). Manifest and tombstone
+    history stay append-only; the ``vacuum`` log entry records the
+    removed runs, so a later read that still needs them (``as_of``
+    before the compaction) fails naming the vacuum instead of
+    returning partial rows.
     """
     import shutil
 
     vis = _visible(output_dir)
-    man = _read_manifest(spark, output_dir, vis)
+    man = read_manifest(spark, output_dir, vis, raw=True)
     if man is None:
         return dict(snapshot=None, n_deleted_runs=0, bytes_reclaimed=0,
                     deleted_runs=[])
-    keep = {r["run"] for r in _visible_ok_keys(spark, vis, man)
+    keep = {r["run"] for r in _reachable_keys(spark, output_dir, vis, man)
             .select("run").distinct().collect()}
-    keep |= snapshots.branch_data_runs(output_dir)
     reclaimed = 0
     deleted = []
-    for run_val in sorted((vis.runs & vis.listed["encoded"]) - keep):
+    for run_val in sorted(vis.runs - keep):
         d = os.path.join(vis.root, "encoded", f"run={run_val}")
+        if not os.path.isdir(d):
+            continue
         for root, _dirs, files in os.walk(d):
             reclaimed += sum(
                 os.path.getsize(os.path.join(root, f)) for f in files)
@@ -2580,12 +2618,11 @@ def remove_orphans(spark: SparkSession, output_dir: str,
     import shutil
 
     vis = _visible(output_dir)
-    known = vis.listed["manifest"] | vis.committed
-    known |= {e["run"] for e in snapshots.log(output_dir) if e.get("run")}
+    logged = {e["run"] for e in snapshots.log(output_dir) if e.get("run")}
     now = time.time()
     removed, reclaimed = [], 0
-    for name in ("encoded", "tombstones", "deletes"):
-        for run_val in sorted(vis.listed[name] - known):
+    for name, runs in vis.unclaimed.items():
+        for run_val in sorted(runs - logged):
             path = os.path.join(vis.root, name, f"run={run_val}")
             newest, size = 0.0, 0
             for root, _dirs, files in os.walk(path):

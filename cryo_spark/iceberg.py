@@ -820,7 +820,7 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
     # more than the distributed footer pass itself. Manifest rows mirror
     # encoded rows 1:1 (same keys, minus payload), so the visible ok-row
     # count IS the visible encoded-row count.
-    man = engine._read_manifest(spark, out_dir, vis)
+    man = engine.read_manifest(spark, out_dir, vis)
     if man is None:
         raise ValueError(f"{out_dir}: nothing committed to export")
     vis_keys = engine._visible_ok_keys(spark, vis, man)

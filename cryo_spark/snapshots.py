@@ -414,22 +414,6 @@ def publish(output_dir: str, name: str) -> int:
     return commit(output_dir, None, "publish", branch=name, target=head)
 
 
-def branch_data_runs(output_dir: str) -> set[str]:
-    """Every data/delete run committed to ANY branch (vacuum keep-set).
-
-    Conservative by design: a branch run stays on disk as long as its
-    branch entries exist, even if unreachable from the branch head —
-    the analog of Iceberg's rule that expire_snapshots only drops files
-    unreferenced by every branch/tag.
-    """
-    return {
-        e["run"]
-        for e in log(output_dir)
-        if e.get("branch") is not None and e.get("run")
-        and e["kind"] in (*_DATA_KINDS, "delete")
-    }
-
-
 def rollback(output_dir: str, target: int) -> int:
     """Append a rollback entry: current state becomes the state at
     ``target`` (Iceberg rollback_to_snapshot). History stays append-only

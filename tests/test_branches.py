@@ -97,6 +97,39 @@ def test_vacuum_keeps_branch_runs(spark, branched):
     assert decode_frozen(spark, out, as_of="branch:audit").count() == 450
 
 
+def test_vacuum_keeps_main_runs_a_branch_still_reads(spark, branched):
+    """A branch reads main as it stood at its anchor: compacting main
+    retires A there, but A is still live at the branch head, so vacuum
+    must keep its payload and the branch read must stay whole."""
+    from cryo_spark import compact, verify_output
+
+    src, out = branched
+    c = compact(spark, out, target_tokens=400_000)
+    assert c["run"] is not None and c["n_compacted"] > 1
+    rep = vacuum(spark, out)
+    assert rep["n_deleted_runs"] == 0, rep
+    assert decode_frozen(spark, out, as_of="branch:audit").count() == 450
+    assert decode_frozen(spark, out).count() == 300
+    assert verify_output(spark, out)["status"] == "ok"
+
+
+def test_verify_catches_lost_branch_only_payload(spark, branched):
+    """A branch-only run's lost file is corruption before a publish
+    exposes it on main."""
+    import glob
+    import os
+
+    from cryo_spark import verify_output
+
+    src, out = branched
+    (b_run,) = [e["run"] for e in snapshots.log(out)
+                if e.get("branch") == "audit" and e["kind"] == "append"]
+    os.remove(sorted(glob.glob(f"{out}/encoded/run={b_run}/*.parquet"))[0])
+    r = verify_output(spark, out)
+    assert r["status"] == "corrupt", r
+    assert r["missing_payload_runs"] == [b_run], r
+
+
 def test_stream_encode_to_branch(spark, branched, tmp_path):
     """Streaming WAP: micro-batches land on the branch, publish reveals."""
     from cryo_spark import streaming

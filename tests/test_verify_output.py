@@ -135,12 +135,15 @@ def test_crashed_rewrite_is_invisible_and_flagged(spark, frozen):
     assert r["status"] == "warn" and r["n_orphan_rows"] > 0
 
 
+@pytest.mark.parametrize("lost", ["freeze", "compact"])
 def test_rolled_back_compaction_cannot_mask_lost_payload(spark,
                                                          sequences_path,
-                                                         tmp_path):
+                                                         tmp_path, lost):
     """After a rollback past a compaction, the compaction's tombstones
     no longer count: the freeze run's chunks are live again, so a lost
-    encoded file of that run is missing payload, named by run."""
+    encoded file of that run is missing payload, named by run. The
+    hidden compaction run is still checked too: a later rollback can
+    show it again."""
     from cryo_spark import snapshots
 
     out = str(tmp_path / "out")
@@ -148,10 +151,11 @@ def test_rolled_back_compaction_cannot_mask_lost_payload(spark,
     c = compact(spark, out, target_tokens=400_000)
     assert c["run"] is not None and c["n_compacted"] > 1
     snapshots.rollback(out, s["snapshot"])
-    files = sorted(glob.glob(f"{out}/encoded/run={s['run']}/*.parquet"))
-    assert len(files) > 1
+    run = s["run"] if lost == "freeze" else c["run"]
+    files = sorted(glob.glob(f"{out}/encoded/run={run}/*.parquet"))
+    assert len(files) > (1 if lost == "freeze" else 0)
     os.remove(files[0])
     r = verify_output(spark, out)
     assert r["status"] == "corrupt", r
     assert r["n_missing_payload"] > 0, r
-    assert r["missing_payload_runs"] == [s["run"]], r
+    assert r["missing_payload_runs"] == [run], r
